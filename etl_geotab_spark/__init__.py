@@ -19,6 +19,12 @@ Layout
   (reference parity: task.ts:147-219, 294).
 - ``streaming`` — Structured Streaming equivalents (watermark horizon,
   tumbling/sliding/session windows, scheduled re-pull).
+- ``worker_boot`` — installed on import: Python workers re-read a zip
+  archive on ``sys.path`` only when it changed, not on every task.
 """
+
+from etl_geotab_spark import worker_boot as _worker_boot
+
+_worker_boot.install()
 
 __version__ = "0.1.0"

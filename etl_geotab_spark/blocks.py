@@ -40,11 +40,18 @@ def release_checkpoint(df: DataFrame) -> bool:
     """Free the storage blocks behind a ``localCheckpoint``-ed
     DataFrame. Only call once nothing will read ``df`` again: a
     checkpoint's lineage is truncated, so its data CANNOT be recomputed
-    after release. Returns True iff blocks were released."""
+    after release. Returns True iff blocks were released; a frame whose
+    analyzed root is not a persisted ``LogicalRDD`` (a projection, a
+    ``createDataFrame`` over an RDD) is left alone and gives False."""
     try:
         plan = df._jdf.queryExecution().analyzed()
         # LogicalRDD (the checkpoint's plan node) carries the RDD
-        plan.rdd().unpersist(False)
+        if plan.getClass().getSimpleName() != "LogicalRDD":
+            return False
+        rdd = plan.rdd()
+        if not rdd.getStorageLevel().isValid():  # NONE: nothing persisted
+            return False
+        rdd.unpersist(False)
         return True
     except Exception:
         return False

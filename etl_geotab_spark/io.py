@@ -34,10 +34,12 @@ BROADCAST_SAFE = frozenset({"region", "nation", "supplier"})
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one fixture table. Lazy: no job runs until an action.
 
-    ``events.ts`` is stored as parquet TIMESTAMP(NANOS), which Spark's
-    vectorized reader rejects; we read it as raw long ns (legacy conf)
-    and convert to TimestampType via integer µs division — same
-    truncation DuckDB applies casting ns→µs, so oracles agree.
+    The fixtures store ``events.ts`` as parquet TIMESTAMP(MICROS) with
+    ``isAdjustedToUTC=false`` at every scale. The ``nanosAsLong`` branch
+    guards an ``events`` file written as TIMESTAMP(NANOS), which Spark's
+    vectorized reader rejects: it reads the column as raw long ns (legacy
+    conf) and converts to TimestampType via integer µs division — the
+    same truncation DuckDB applies casting ns→µs, so oracles agree.
     """
     # Fixture timestamps are parquet TIMESTAMP with isAdjustedToUTC=false;
     # Spark 4's default inferTimestampNTZ=true would surface them as

@@ -163,11 +163,7 @@ def run_connector_pipeline(
         register_geotab_source,
     )
 
-    register_geotab_source(spark)
-    try:  # the reader implements pushFilters → the gate conf must be on
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    except Exception:
-        pass
+    register_geotab_source(spark)  # also turns on the pushdown gate conf
 
     def read(entity: str, **opts):
         # Wire schemas are fixed constants (task.ts:12-55) — passing

@@ -1279,10 +1279,19 @@ _ROUND7_WINDOW: list[str] = [
 ]
 
 
+# §21 guard pull after the round-18 close: the pushdown-conf cleanup in
+# pipeline/geotab.py::run_connector_pipeline implicates this query, which
+# the round-18 window does not cover (``python tools/window_guard.py``).
+# Front-loaded ahead of that window, so its last row (geofence_dwell)
+# rotates out of the 50-query prefix.
+_POST_R18_GUARD_PULLS: list[str] = ["geotab_connector_pipeline"]
+
+
 def _ordered_names() -> list[str]:
     names = list(_REGISTRY)
     head_lists = (
-        _ROUND18_WINDOW
+        _POST_R18_GUARD_PULLS
+        + _ROUND18_WINDOW
         + _ROUND17_WINDOW
         + _ROUND16_WINDOW
         + _ROUND15_WINDOW
@@ -8828,7 +8837,8 @@ def q_semdedup_buckets(spark: SparkSession, sf: str) -> DataFrame:
     # the verify). Nested-array pruning can't narrow element_at reads,
     # so materialize the 16-byte/row (vec_id, bucket) projection ONCE
     # and serve the three narrow consumers from it: 5 full-width scans
-    # -> 3 (plans/r18/semdedup_buckets_{before,after}.txt). The
+    # -> 2 (the verify's vector sides) plus the one narrow checkpoint
+    # build (plans/r18/semdedup_buckets_{before,after}.txt). The
     # checkpoint is O(16B x n) at any scale; values unchanged (the
     # bucket expression is deterministic, computed once instead of 3x).
     b_ids = emb.select("vec_id", bucket.alias("bucket")).localCheckpoint(

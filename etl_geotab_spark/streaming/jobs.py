@@ -60,9 +60,10 @@ def stream_events(
     """Streaming scan of the ``events`` fixture (file source).
 
     Schema comes from a batch peek (file sources need an explicit
-    schema — streaming can't infer). The TIMESTAMP(NANOS) column is
-    read as raw long ns and converted to µs TimestampType, same as the
-    batch path in ``io.load_table`` so batch/stream results agree.
+    schema — streaming can't infer). ``ts`` is TIMESTAMP(MICROS) in the
+    fixtures; a TIMESTAMP(NANOS) file would be read as raw long ns and
+    converted to µs TimestampType, same as the batch path in
+    ``io.load_table`` so batch/stream results agree.
     """
     from etl_geotab_spark.io import load_table
 

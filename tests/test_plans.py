@@ -100,6 +100,15 @@ def test_block_release_helpers(spark):
     assert release_checkpoint(ck) is True
     assert persistent_rdd_count(spark) == base
 
+    # a LogicalRDD root whose RDD was never persisted is not a checkpoint:
+    # no-op, and the frame stays readable
+    plain = spark.createDataFrame(
+        spark.sparkContext.parallelize([(i,) for i in range(10)]), "x long"
+    )
+    assert release_checkpoint(plain) is False
+    assert plain.count() == 10
+    assert persistent_rdd_count(spark) == base
+
     # release_all_cached: catalog cache + surviving checkpoint blocks
     spark.range(50).persist().count()
     spark.range(60).localCheckpoint(eager=True)
