@@ -12,8 +12,11 @@ part 5):
   midpoint, so rounding mode is moot).
 - **Averages**: exact decimal sum, then ONE IEEE double division —
   never engine-native AVG (each engine's decimal-avg scale differs).
-- **Timestamps**: fixtures store ``events.ts`` as ns; Spark truncates
-  to µs on read, so oracles ``CAST(ts AS TIMESTAMP)`` to match.
+- **Timestamps**: fixtures store ``events.ts`` as parquet
+  TIMESTAMP(MICROS) with ``isAdjustedToUTC=false`` at every scale, so
+  both engines read the same µs values; oracles ``CAST(ts AS
+  TIMESTAMP)``, which also covers an ns-written file (``load_table``'s
+  ``nanosAsLong`` guard truncates to µs the same way).
 - **Every computed column aliased identically on both sides.**
 """
 
@@ -88,1245 +91,12 @@ def register(name: str, oracle: str | None):
     return deco
 
 
-# The correctness driver verifies a 50-query prefix of `queries()` per
-# round, so the exported ORDER is rotated per round to put the highest-
-# signal queries inside the checked window. Registration order below
-# never changes; only the exported ordering rotates.
-#
-# Round-6 window (round-5 came back 50/50 green — every queries()
-# name now keeps its green row; this round converts "no known
-# regressions" into driver-confirmed freshness): (a) the 5
-# `_ROUND6_CARRY` paired stats queries — the last oracle-paired
-# queries with no driver row ever (spearman_correlation additionally
-# re-verified after its global-rank window was migrated onto
-# operators/rownum.ordered_prefix_sum this round); (b) all 17 queries
-# whose latest driver row is from ROUND 1 (three rounds of refactors
-# ago); (c) 28 round-2-era rows, operator-bearing first (the
-# _R02_REFRESH_PRIORITY operators touched in round 3, then streaming/
-# pipeline/multimodal/sampling queries). 5+17+28 = 50 exactly; after
-# this window no oracle-paired query's latest row predates round 3.
-_ROUND6_WINDOW: list[str] = [
-    # (a) first-ever driver rows — the final 5 paired queries
-    "chi_square_independence",
-    "cohens_kappa",
-    "spearman_correlation",
-    "winsorized_stats",
-    "keyset_pagination",
-    # (b) round-1-era refresh (oldest rows in the ledger)
-    "scan_filter_project",
-    "string_functions",
-    "math_functions",
-    "conditional_functions",
-    "json_functions",
-    "set_ops",
-    "distinct_values",
-    "text_stats",
-    "token_frequencies",
-    "percentiles",
-    "cube_agg",
-    "union_all_tagged",
-    "map_functions",
-    "struct_geojson",
-    "array_norms",
-    "haversine_distance",
-    "text_quality",
-    # (c) round-2-era refresh: operators touched in round 3 first
-    "range_join_events",
-    "chunk_documents",
-    "grid_spatial_join",
-    "variant_shred",
-    "sessionize_events",
-    "interval_overlap_join",
-    "time_range_moving_avg",
-    # then operator-bearing / streaming / pipeline r02 rows
-    "geotab_flagship",
-    "global_rownum_orders",
-    "streaming_dedup_keys",
-    "streaming_stream_join",
-    "multimodal_decode_stats",
-    "multimodal_frame_sample",
-    "salted_skew_join",
-    "scd2_user_history",
-    "upsert_orders",
-    "gap_fill_forward",
-    "funnel_conversion",
-    "ohlc_downsample",
-    "pack_sequences",
-    "tfidf_top_terms",
-    "quality_filter_pipeline",
-    "stratified_sample",
-    "hash_sample",
-    "bigram_pmi",
-    "pivot_returnflag",
-    "grouping_sets",
-    "collect_array_agg",
-]
-
-# Round-5 window (all 50 green in CORRECTNESS_r05): (a) the two r04
-# RED rows, re-verified after their fixes; (b) stateful_user_stats —
-# T2 keyed state, first green row; (c) 47 round-4b/4c first-evers.
-_ROUND_NEW: list[str] = [
-    # r04 red rows, fixed this round
-    "embedding_quantize",
-    "incremental_agg_merge",
-    # T2 keyed state (applyInPandasWithState; rows-only by design)
-    "stateful_user_stats",
-    # -- operator-bearing first-evers (judge-named priorities) --
-    "scd2_point_in_time",
-    "entity_resolution",
-    "asof_nearest_clicks",
-    "interval_merge",
-    "bm25_search",
-    "cdc_apply",
-    "kmv_distinct",
-    "count_min_freq",
-    "rolling_p95",
-    "set_ops_multiset",
-    "null_safe_join",
-    "partitioned_write_prune",
-    "streaming_sliding_window",
-    "schema_evolution",
-    # -- remaining round-4b first-evers --
-    "semdedup_buckets",
-    "k_anonymity",
-    "readability_scores",
-    "trip_segmentation",
-    "event_debounce",
-    "geofence_dwell",
-    "event_transitions",
-    "table_stats",
-    "snapshot_diff",
-    "nested_assembly",
-    "rollup_cascade",
-    "retention_purge",
-    "late_data_audit",
-    # -- remaining round-4c first-evers --
-    "attribution_last_touch",
-    "decile_lift",
-    "ab_test_zscore",
-    "logodds_terms",
-    "zonemap_pruning_eval",
-    "linear_interpolate",
-    "compaction_plan",
-    "kaplan_meier",
-    "corrupt_record_audit",
-    "contrastive_pairs",
-    "training_batch_assembly",
-    # -- closing-batch first-evers --
-    "psi_drift",
-    "hotspot_regions",
-    "cusum_changepoint",
-    "boolean_retrieval",
-    "knn_accuracy",
-    "rolling_active_users",
-    "dedup_keep_best",
-    "quantized_rescore_topk",
-    "target_encoding",
-]
-# Oracle-paired but past the 50-cutoff this round: pure-expression
-# stats queries with no operator file behind them — least likely to
-# regress, so they give up their slots to the operator-bearing set.
-# (Historical: these headed the round-6 window for their first-ever
-# CORRECTNESS rows; the freshness proposer has owned rotation since.)
-_ROUND6_CARRY: list[str] = [
-    "chi_square_independence",
-    "cohens_kappa",
-    "spearman_correlation",
-    "winsorized_stats",
-    "keyset_pagination",
-    # rows-only (pytest-gated vs numpy/ground truth; a driver
-    # rows-only row adds least signal) — after the paired carry
-    "pca_project",
-    "pagerank_parts",
-    "bpe_learn_merges",
-    "logreg_train",
-    "ndcg_eval",
-    "holt_forecast",
-    "forecast_backtest",
-    "lsh_ann_topk",
-    "ivf_ann_topk",
-]
-# checked green in round 4 (first-evers of that window, minus the two
-# red rows promoted back into _ROUND_NEW above)
-_R04_CHECKED: list[str] = [
-    "geotab_connector_pipeline",
-    "pricing_summary",
-    "dedup_clusters",
-    "ann_recall_eval",
-    "minhash_recall_eval",
-    "recursive_order_chains",
-    "boilerplate_ngram_ratio",
-    "vocab_coverage",
-    "quality_adaptive_filter",
-    "heavy_hitters",
-    "skyline_pareto",
-    "market_share",
-    "weighted_sample_topk",
-    "unigram_logprob",
-    "geofence_contains",
-    "time_weighted_avg",
-    "cross_corpus_dedup",
-    "jsonl_ingest",
-    "csv_ingest",
-    "ngram_jaccard_pairs",
-    "geotab_stream_pipeline",
-    "embedding_topk",
-    "embedding_near_dup",
-    "retention_cohorts",
-    "token_entropy",
-    "triangle_count",
-    "lateral_top_orders",
-    "seasonal_zscore",
-    "orc_ingest",
-    "association_rules",
-    "volume_shipping",
-    "product_type_profit",
-    "important_parts",
-    "customer_order_distribution",
-    "promo_revenue_ratio",
-    "top_supplier_revenue",
-    "small_qty_revenue",
-    "large_volume_customers",
-    "disjunctive_filter_revenue",
-    "idle_rich_customers",
-    "bloom_semi_join",
-    "zorder_cluster",
-    "repeated_spans",
-    "skew_profile",
-    "corpus_datacard",
-    "distribution_drift",
-    "dq_audit",
-    "join_cardinality_estimate",
-]
-# r02-checked, operators touched in round 3 → refresh first (VERDICT #4)
-_R02_REFRESH_PRIORITY: list[str] = [
-    "range_join_events",
-    "chunk_documents",
-    "grid_spatial_join",
-    "variant_shred",
-    "sessionize_events",
-    "interval_overlap_join",
-    "time_range_moving_avg",
-]
-# pure-expression r02 queries with untouched operators — least likely
-# to regress, pushed past the cutoff to free slots
-_ROUND_DEFER = {
-    "conditional_agg",
-    "mode_median",
-    "linear_fit_stats",
-    "zscore_outliers",
-    "histogram_buckets",
-    "regex_token_ops",
-    "posexplode_terms",
-    "string_agg_sorted",
-    "exists_subquery",
-    "in_subquery",
-}
-# last green in round 2 (besides the priority/deferred sets above)
-_R02_REST: list[str] = [
-    "geotab_flagship",
-    "collect_array_agg",
-    "multimodal_frame_sample",
-    "multimodal_decode_stats",
-    "salted_skew_join",
-    "pivot_returnflag",
-    "grouping_sets",
-    "hash_sample",
-    "quality_filter_pipeline",
-    "streaming_stream_join",
-    "window_distribution",
-    "tfidf_top_terms",
-    "gap_fill_forward",
-    "stratified_sample",
-    "bigram_pmi",
-    "pack_sequences",
-    "streaming_dedup_keys",
-    "unpivot_metrics",
-    "shipping_priority",
-    "local_supplier_volume",
-    "forecast_revenue",
-    "returned_item_report",
-    "upsert_orders",
-    "scd2_user_history",
-    "global_rownum_orders",
-    "ohlc_downsample",
-    "funnel_conversion",
-    "profile_lineitem",
-]
-
-
-# last green in round 1 — three rounds stale; spare window slots (the
-# 50-cutoff minus the tiers above) refresh these oldest rows first
-_R01_REFRESH: list[str] = [
-    "scan_filter_project",
-    "string_functions",
-    "math_functions",
-    "conditional_functions",
-    "json_functions",
-    "set_ops",
-    "distinct_values",
-    "text_stats",
-    "token_frequencies",
-    "percentiles",
-    "cube_agg",
-    "union_all_tagged",
-    "map_functions",
-    "struct_geojson",
-    "array_norms",
-    "haversine_distance",
-    "text_quality",
-]
-
-
-# Round-18 window — the proposer's output verbatim (`python
-# tools/freshness.py --propose` at the r17 close base 8d6c32f, run
-# against the round-18 optimization diff so the §21 guard tier is
-# live): (0) 18 guard pulls — every query whose executed code the r18
-# optimization batches touched (the blocks.py release adopters via
-# connected_components/pagerank/learn_bpe_merges, the §4.4
-# deduplicated-UDF fixes in minhash_signatures/_nearest_centroids
-# implicating the minhash/IVF/ANN-eval family, the scan-multiplicity
-# checkpoint batch in q_bigram_pmi/q_distribution_drift/
-# q_source_temperature_resample/q_unigram_logprob/q_semdedup_buckets
-# and the heavy_hitters fused summary, and the q_doc_winnow size-probe
-# fold), proposer order; then (a) the rotation tail: the oldest r13
-# rows oldest-first, including the three rows the r17 amendments
-# displaced (incremental_agg_merge, jsonl_ingest, csv_ingest), 19+31 =
-# 50 (logreg_train rotates to the next window). After this window the oldest ledger row is r13 — staleness <= 4
-# rounds keeps holding (fresh horizon r15 at a 17-round ledger).
-_ROUND18_WINDOW: list[str] = [
-    # (0) §21 guard pulls — r18 optimization batches, proposer order
-    "minhash_near_dup",
-    "dedup_clusters",
-    "ivf_ann_topk",
-    "doc_winnow_fingerprints",
-    "bigram_pmi",
-    "source_temperature_resample",
-    "ann_recall_eval",
-    "minhash_recall_eval",
-    "heavy_hitters",
-    "unigram_logprob",
-    "pagerank_parts",
-    "distribution_drift",
-    "semdedup_buckets",
-    "count_min_freq",
-    "entity_resolution",
-    "bpe_learn_merges",
-    "ndcg_eval",
-    "hotspot_regions",
-    "dedup_keep_best",
-    # (a) rotation tail: oldest r13 rows, proposer order
-    "incremental_agg_merge",
-    "jsonl_ingest",
-    "csv_ingest",
-    "retention_cohorts",
-    "lateral_top_orders",
-    "seasonal_zscore",
-    "orc_ingest",
-    "volume_shipping",
-    "product_type_profit",
-    "important_parts",
-    "customer_order_distribution",
-    "promo_revenue_ratio",
-    "top_supplier_revenue",
-    "small_qty_revenue",
-    "large_volume_customers",
-    "disjunctive_filter_revenue",
-    "idle_rich_customers",
-    "bloom_semi_join",
-    "zorder_cluster",
-    "embedding_quantize",
-    "repeated_spans",
-    "pca_project",
-    "skew_profile",
-    "corpus_datacard",
-    "dq_audit",
-    "join_cardinality_estimate",
-    "k_anonymity",
-    "readability_scores",
-    "trip_segmentation",
-    "event_debounce",
-    "geofence_dwell",
-]
-
-# Round-17 window — the proposer's output verbatim (`python
-# tools/freshness.py --propose` at the r16 close base bb075ce, after
-# regenerating DEPMAP at that base), AMENDED mid-round by the
-# proposer itself — the r15/r16 amendment procedure, applied three
-# times for the round-17 OPTIMIZATION batches: the §21 guard tier
-# pulls every query whose executed code the optimization pass touched
-# (batch 1: the q_grid_spatial_join / q_linear_fit_stats /
-# q_recursive_order_chains rewrites, the pagerank co-partitioning,
-# and the nine _spread_adaptive adopters; batch 2: the
-# q_triangle_count / q_minhash_recall_eval restructures and the
-# ngram_jaccard_pairs / ngram_jaccard_cross pre-cut gram persists,
-# which also implicate dedup_clusters / dedup_keep_best /
-# cross_corpus_dedup; batch 3: the connected_components
-# explode-symmetrize, additionally implicating entity_resolution /
-# hotspot_regions, and the pagerank edge materialization, covered by
-# pagerank_parts; batch 4: the q_market_share window-total rewrite
-# and the q_association_rules basket materialization), 23 names
-# front-loaded in proposer order. Then the original proposal's tail:
-# the remaining r12 rows and the oldest r13 rows, oldest-first,
-# truncated to keep 23+27 = 50 (the displaced rows rotate to r18).
-# After this window the r12 tier clears entirely and the oldest
-# ledger row is r13 — staleness <= 4 rounds holds everywhere.
-_ROUND17_WINDOW: list[str] = [
-    # (0) §21 guard pulls — the r17 optimization batches 1+2+3, proposer
-    # order (batch 3: the connected_components explode-symmetrize pulls
-    # entity_resolution + hotspot_regions next to the four dependents
-    # already here; the pagerank edge materialization was already
-    # covered by pagerank_parts)
-    "ngram_jaccard_pairs",
-    "simhash_near_dup",
-    "dedup_clusters",
-    "tfidf_top_terms",
-    "grid_spatial_join",
-    "bigram_pmi",
-    "linear_fit_stats",
-    "minhash_recall_eval",
-    "recursive_order_chains",
-    "heavy_hitters",
-    "skyline_pareto",
-    "market_share",
-    "unigram_logprob",
-    "cross_corpus_dedup",
-    "token_entropy",
-    "triangle_count",
-    "association_rules",
-    "pagerank_parts",
-    "entity_resolution",
-    "bpe_learn_merges",
-    "spearman_correlation",
-    "hotspot_regions",
-    "dedup_keep_best",
-    # (a) rotation tail: remaining r12 rows then oldest r13 rows, proposer order
-    "unpivot_metrics",
-    "shipping_priority",
-    "local_supplier_volume",
-    "forecast_revenue",
-    "returned_item_report",
-    "profile_lineitem",
-    "pii_redact",
-    "repetition_ratio",
-    "contamination_overlap",
-    "dedup_normalized",
-    "train_val_test_split",
-    "embedding_centroid_distance",
-    "mad_outliers",
-    "vin_filter",
-    "udtf_top_terms",
-    "source_temperature_resample",
-    "ann_recall_eval",
-    "udaf_weighted_median",
-    "fuzzy_match_customers",
-    "grouped_map_ewma",
-    "flagship_schema_contract",
-    "boilerplate_ngram_ratio",
-    "vocab_coverage",
-    "quality_adaptive_filter",
-    "weighted_sample_topk",
-    "geofence_contains",
-    "time_weighted_avg",
-]
-
-# Round-16 window — the proposer's output verbatim (`python
-# tools/freshness.py --propose` at the r15 close base ca9a3bb, after
-# regenerating DEPMAP at that base), AMENDED once mid-round by the
-# proposer itself — the r15 procedure repeating on a smaller find.
-# The §21 guard tier is live twice over: (a) the r15-advice race
-# fix in streaming/jobs.py (try/except around the dangling-link
-# unlink) changed the executed `stream_events` symbol, pulling its
-# six dependents even though all six are r15:green — a dependent's
-# old green row says nothing about the changed code; (b) the §26b
-# vacuous-evidence sweep changed `q_minhash_recall_eval` in
-# PRODUCTION (an empty ground-truth set now reports NULL recall/
-# precision, never a vacuous 1.0), so the guard demanded
-# minhash_recall_eval too — the proposal was regenerated and
-# re-adopted verbatim, displacing `unpivot_metrics` (r12:green,
-# rotates r17). Then the full 21-query r11 tier (the ledger floor,
-# including the three rows the r15 amendment displaced) and the 22
-# oldest r12 rows. 7+21+22 = 50. After this window the oldest
-# ledger row is r12 — staleness <= 4 rounds holds everywhere.
-_ROUND16_WINDOW: list[str] = [
-    # (0) §21 guard pulls — stream_events dependents (r16 advice
-    # fix: race-safe link prune) + minhash_recall_eval (§26b
-    # vacuous-default fix), proposer order
-    "streaming_tumbling_window",
-    "stateful_user_stats",
-    "streaming_stream_join",
-    "streaming_dedup_keys",
-    "minhash_recall_eval",
-    "streaming_session_window",
-    "streaming_sliding_window",
-    # (a) the 21-query r11 tier (the ledger floor), proposer order
-    "sessionize_events",
-    "interval_overlap_join",
-    "gap_fill_forward",
-    "grid_spatial_join",
-    "stratified_sample",
-    "bigram_pmi",
-    "pack_sequences",
-    "variant_shred",
-    "upsert_orders",
-    "scd2_user_history",
-    "global_rownum_orders",
-    "ohlc_downsample",
-    "funnel_conversion",
-    "time_range_moving_avg",
-    "bucketed_colocated_join",
-    "geotab_stream_pipeline",
-    "chi_square_independence",
-    "spearman_correlation",
-    "winsorized_stats",
-    "cohens_kappa",
-    "keyset_pagination",
-    # (b) the 22 oldest r12 rows, proposer order
-    "pricing_summary",
-    "embedding_topk",
-    "approx_distinct",
-    "ngram_jaccard_pairs",
-    "minhash_near_dup",
-    "simhash_near_dup",
-    "embedding_near_dup",
-    "dedup_clusters",
-    "lsh_ann_topk",
-    "ivf_ann_topk",
-    "window_distribution",
-    "approx_percentiles",
-    "hll_sketch_rollup",
-    "conditional_agg",
-    "mode_median",
-    "posexplode_terms",
-    "kmeans_embeddings",
-    "doc_winnow_fingerprints",
-    "histogram_buckets",
-    "regex_token_ops",
-    "linear_fit_stats",
-    "zscore_outliers",
-]
-
-# Round-15 window — the proposer's output verbatim, AMENDED once
-# mid-round by the proposer itself. Originally adopted as the full
-# 19-query r10 tier + the 31 oldest r11 rows (guard-clean against
-# the r14 close base 9b958a5: zero changed files, zero implicated).
-# Then the r15 sf1 stress refresh caught a silent-empty-stream bug
-# in the streaming fixture adapter (stream_events linked a
-# directory-shaped fixture as one symlink the file source never
-# descends into — streaming/jobs.py), and fixing it changed an
-# executed path: the §21 guard implicates all six stream_events
-# dependents, three of which the original window did not cover. Per
-# the standing rule (guard pulls are tier 0, mandatory regardless
-# of freshness) the proposal was REGENERATED with the guard tier
-# live and re-adopted verbatim: 6 guard pulls front-loaded, the
-# full 19-row r10 tier kept, then the 26 oldest r11 rows. The three
-# rows this displaced (sessionize_events, interval_overlap_join,
-# gap_fill_forward — all r11:green) rotate in r16. After this
-# window the oldest ledger row is still r11 — staleness ≤ 4 holds.
-_ROUND15_WINDOW: list[str] = [
-    # (0) §21 guard pulls — stream_events dependents (the r15
-    # streaming-fixture fix), proposer order
-    "streaming_tumbling_window",
-    "stateful_user_stats",
-    "streaming_stream_join",
-    "streaming_dedup_keys",
-    "streaming_session_window",
-    "streaming_sliding_window",
-    # (a) the 19-query r10 tier (the ledger floor), proposer order
-    "set_ops_multiset",
-    "partitioned_write_prune",
-    "linear_interpolate",
-    "compaction_plan",
-    "kaplan_meier",
-    "scd2_point_in_time",
-    "corrupt_record_audit",
-    "contrastive_pairs",
-    "training_batch_assembly",
-    "psi_drift",
-    "hotspot_regions",
-    "cusum_changepoint",
-    "boolean_retrieval",
-    "knn_accuracy",
-    "rolling_active_users",
-    "dedup_keep_best",
-    "quantized_rescore_topk",
-    "target_encoding",
-    # (b) the 26 oldest r11 rows, proposer order
-    "dedup_latest_events",
-    "group_agg_minmax",
-    "rollup_orders",
-    "join_large_fact",
-    "join_left_outer",
-    "join_semi",
-    "join_anti",
-    "join_broadcast_dims",
-    "asof_join_events_orders",
-    "date_functions",
-    "window_rank",
-    "window_lag_lead",
-    "window_running_agg",
-    "topk_global",
-    "topk_per_group",
-    "dedup_exact_docs",
-    "tumbling_window",
-    "correlated_subquery",
-    "sliding_window",
-    "session_window",
-    "geotab_connector_pipeline",
-    "multimodal_metadata",
-    "exists_subquery",
-    "in_subquery",
-    "string_agg_sorted",
-    "tfidf_top_terms",
-]
-
-# Round-14 window — the proposer's output verbatim (`python
-# tools/freshness.py --propose`: the full 21-query r09 tier — the
-# whole remaining ledger floor — then the 29 oldest r10 rows), ZERO
-# swaps. The §21 guard ran before adoption (`python
-# tools/window_guard.py 98c41d7` against the r13 round-close base):
-# DEPMAP.json was regenerated first because the map predated the
-# base (`_ROUND13_WINDOW`-only queries.py edit at r13 close — the
-# proposer correctly warned on that), and the fresh map reports
-# zero changed package files, zero implicated queries, so the
-# proposer's oldest-first order stands untouched. 21+29 = 50. After
-# this window: the r09 tier is fully cleared and the oldest ledger
-# row is r10 — staleness ≤ 4 rounds holds everywhere. The window
-# includes `zonemap_pruning_eval`, the r13 verdict's perf watch item
-# (2.27→4.85 s on the slow r13 box); its r14 best-of-pair is
-# recorded alongside the boxcal fields per the adjudication
-# protocol. Remaining r10 tier (19 rows) + r11 tier rotate next,
-# oldest-first.
-_ROUND14_WINDOW: list[str] = [
-    # (a) the 21-query r09 tier (the ledger floor), proposer order
-    "cdc_apply",
-    "kmv_distinct",
-    "count_min_freq",
-    "event_transitions",
-    "table_stats",
-    "snapshot_diff",
-    "rolling_p95",
-    "nested_assembly",
-    "rollup_cascade",
-    "retention_purge",
-    "late_data_audit",
-    "asof_nearest_clicks",
-    "attribution_last_touch",
-    "interval_merge",
-    "bm25_search",
-    "schema_evolution",
-    "entity_resolution",
-    "decile_lift",
-    "ab_test_zscore",
-    "logodds_terms",
-    "zonemap_pruning_eval",
-    # (b) the 29 oldest r10 rows, proposer order
-    "geotab_flagship",
-    "collect_array_agg",
-    "scan_filter_project",
-    "string_functions",
-    "math_functions",
-    "conditional_functions",
-    "json_functions",
-    "set_ops",
-    "distinct_values",
-    "text_stats",
-    "token_frequencies",
-    "percentiles",
-    "cube_agg",
-    "union_all_tagged",
-    "map_functions",
-    "struct_geojson",
-    "array_norms",
-    "haversine_distance",
-    "text_quality",
-    "multimodal_frame_sample",
-    "multimodal_decode_stats",
-    "range_join_events",
-    "salted_skew_join",
-    "chunk_documents",
-    "pivot_returnflag",
-    "grouping_sets",
-    "hash_sample",
-    "quality_filter_pipeline",
-    "null_safe_join",
-]
-
-# Round-13 window — the proposer's output verbatim (`python
-# tools/freshness.py --propose`: the full 22-query r08 tier — the
-# whole remaining ledger floor — then the 28 oldest r09 rows), ZERO
-# swaps. The §21 guard ran before adoption (`python
-# tools/window_guard.py` against the r12 round-close base f993f14):
-# DEPMAP.json was regenerated first because the map predated the
-# base (`_ordered_names`-only queries.py edit at r12 close — the
-# guard correctly failed closed on that), and the fresh map reports
-# zero changed package files, zero implicated queries, so the
-# proposer's oldest-first order stands untouched. 22+28 = 50. After
-# this window: the r08 tier is fully cleared and the oldest ledger
-# row is r09 — staleness ≤ 4 rounds holds everywhere, and the
-# whole-ledger-postdates-pushFilters milestone (SCALE.md §22)
-# carries forward. Remaining r09 tier (21 rows) + r10 tier rotate
-# next, oldest-first.
-_ROUND13_WINDOW: list[str] = [
-    # (a) the 22-query r08 tier (the ledger floor), proposer order:
-    #     16 oracle-paired, then the 6 rows-only members
-    "skyline_pareto",
-    "market_share",
-    "weighted_sample_topk",
-    "unigram_logprob",
-    "geofence_contains",
-    "time_weighted_avg",
-    "cross_corpus_dedup",
-    "jsonl_ingest",
-    "csv_ingest",
-    "retention_cohorts",
-    "token_entropy",
-    "triangle_count",
-    "lateral_top_orders",
-    "seasonal_zscore",
-    "orc_ingest",
-    "association_rules",
-    "pagerank_parts",
-    "bpe_learn_merges",
-    "logreg_train",
-    "ndcg_eval",
-    "holt_forecast",
-    "forecast_backtest",
-    # (b) the 28 oldest r09 rows, proposer order
-    "stateful_user_stats",
-    "incremental_agg_merge",
-    "volume_shipping",
-    "product_type_profit",
-    "important_parts",
-    "customer_order_distribution",
-    "promo_revenue_ratio",
-    "top_supplier_revenue",
-    "small_qty_revenue",
-    "large_volume_customers",
-    "disjunctive_filter_revenue",
-    "idle_rich_customers",
-    "bloom_semi_join",
-    "zorder_cluster",
-    "embedding_quantize",
-    "repeated_spans",
-    "pca_project",
-    "skew_profile",
-    "corpus_datacard",
-    "distribution_drift",
-    "dq_audit",
-    "join_cardinality_estimate",
-    "semdedup_buckets",
-    "k_anonymity",
-    "readability_scores",
-    "trip_segmentation",
-    "event_debounce",
-    "geofence_dwell",
-]
-
-# Round-12 window — the proposer's output verbatim (`python
-# tools/freshness.py --propose`: the full 24-query r07 tier — the
-# whole remaining ledger floor — then the 26 oldest r08 rows), ZERO
-# swaps. No shared component changes this round: the round-12 code
-# edits are the r11 ADVICE items (a tests-only probe extension in
-# test_bare_session.py, a docstring-only nuance note on
-# `colocated_tables`' info_out, and prose/comment miscount fixes),
-# none of which alters an executed path of any query, so the §21
-# shared-component rule binds nothing and the proposer's
-# oldest-first order stands untouched — verified MECHANICALLY this
-# round: `python tools/window_guard.py` (new; SCALE.md §23) diffs the
-# worktree against the r11 round-close commit on docstring-stripped
-# ASTs and reports zero implicated queries. 24+26 = 50. After this
-# window: the r07 tier is fully cleared and the oldest ledger row is
-# r08 — the MILESTONE (SCALE.md §22): every driver row in the ledger
-# now postdates the r8 pushFilters change, the last shared-component
-# change that ever invalidated recorded rows. Remaining r08 tier (22
-# rows) + r09 tier rotate next, oldest-first.
-_ROUND12_WINDOW: list[str] = [
-    # (a) the 24-query r07 tier (the ledger floor), proposer order
-    "window_distribution",
-    "conditional_agg",
-    "mode_median",
-    "posexplode_terms",
-    "doc_winnow_fingerprints",
-    "histogram_buckets",
-    "regex_token_ops",
-    "linear_fit_stats",
-    "zscore_outliers",
-    "unpivot_metrics",
-    "shipping_priority",
-    "local_supplier_volume",
-    "forecast_revenue",
-    "returned_item_report",
-    "profile_lineitem",
-    "pii_redact",
-    "repetition_ratio",
-    "contamination_overlap",
-    "dedup_normalized",
-    "train_val_test_split",
-    "embedding_centroid_distance",
-    "mad_outliers",
-    "vin_filter",
-    "udtf_top_terms",
-    # (b) the 26 oldest r08 rows, proposer order
-    "pricing_summary",
-    "embedding_topk",
-    "approx_distinct",
-    "ngram_jaccard_pairs",
-    "minhash_near_dup",
-    "simhash_near_dup",
-    "embedding_near_dup",
-    "dedup_clusters",
-    "lsh_ann_topk",
-    "ivf_ann_topk",
-    "approx_percentiles",
-    "hll_sketch_rollup",
-    "kmeans_embeddings",
-    "source_temperature_resample",
-    "ann_recall_eval",
-    "minhash_recall_eval",
-    "streaming_session_window",
-    "udaf_weighted_median",
-    "fuzzy_match_customers",
-    "grouped_map_ewma",
-    "flagship_schema_contract",
-    "recursive_order_chains",
-    "boilerplate_ngram_ratio",
-    "vocab_coverage",
-    "quality_adaptive_filter",
-    "heavy_hitters",
-]
-
-# Round-11 window — the proposer's output (`python tools/freshness.py
-# --propose`: the full 22-query r06 tier — the last rows at the
-# 4-round staleness edge — then the 28 oldest r07 rows) with THREE
-# documented swaps, displacing the proposer's three LAST (lowest-
-# priority) r07 backfill entries (`mode_median`, `conditional_agg`,
-# `window_distribution` — all r07 green, rotating due at r12 with the
-# rest of their tier regardless):
-# 1. `bucketed_colocated_join` (r10 verdict item 2: the only code
-#    path in the repo whose cross-process cache REUSE branch had zero
-#    driver evidence — operators/bucketed.py external-table
-#    registration over shared content-addressed files). Its query now
-#    pins the reuse branch in the compared output itself: a
-#    `cache_reused` column the oracle fixes to TRUE, so the green row
-#    IS the recorded statement of which branch executed.
-# 2.+3. `geotab_connector_pipeline` / `geotab_stream_pipeline` —
-#    shared-component rule (SCALE.md §21): this round touches
-#    `register_geotab_source` (the swallowed conf-set exception is now
-#    debug-logged, r10 advice), so both dependents' driver rows must
-#    postdate the change even though the edit is exception-path-only.
-# 22+25+3 = 50. After this window: oldest ledger row r07 — **24**
-# rows, none touching a shared component changed since (r11 advice
-# corrected the original "22" miscount here: the window cleared 48
-# stale rows, not 50 — the two geotab swaps were r10-fresh, and
-# bucketed_colocated_join, though slotted as a swap, was itself an
-# r07 row, so 72 pre-r11 stale − 48 = 24). Staleness ≤ 4 holds, and
-# the whole ledger postdates r8's pushFilters change at r12 when
-# that last tier rotates.
-_ROUND11_WINDOW: list[str] = [
-    # (a) the 22-query r06 tier, proposer order
-    "streaming_stream_join",
-    "tfidf_top_terms",
-    "sessionize_events",
-    "interval_overlap_join",
-    "gap_fill_forward",
-    "grid_spatial_join",
-    "stratified_sample",
-    "bigram_pmi",
-    "pack_sequences",
-    "streaming_dedup_keys",
-    "variant_shred",
-    "upsert_orders",
-    "scd2_user_history",
-    "global_rownum_orders",
-    "ohlc_downsample",
-    "funnel_conversion",
-    "time_range_moving_avg",
-    "chi_square_independence",
-    "spearman_correlation",
-    "winsorized_stats",
-    "cohens_kappa",
-    "keyset_pagination",
-    # (b) the 25 oldest r07 rows, proposer order (28 proposed, minus
-    #     the 3 displaced by the swaps below)
-    "dedup_latest_events",
-    "group_agg_minmax",
-    "rollup_orders",
-    "join_large_fact",
-    "join_left_outer",
-    "join_semi",
-    "join_anti",
-    "join_broadcast_dims",
-    "asof_join_events_orders",
-    "date_functions",
-    "window_rank",
-    "window_lag_lead",
-    "window_running_agg",
-    "topk_global",
-    "topk_per_group",
-    "dedup_exact_docs",
-    "tumbling_window",
-    "correlated_subquery",
-    "sliding_window",
-    "session_window",
-    "streaming_tumbling_window",
-    "multimodal_metadata",
-    "exists_subquery",
-    "in_subquery",
-    "string_agg_sorted",
-    # (c) the swaps: the r10 verdict's one genuine coverage target,
-    #     then the shared-component dependents of this round's
-    #     register_geotab_source edit
-    "bucketed_colocated_join",
-    "geotab_connector_pipeline",
-    "geotab_stream_pipeline",
-]
-
-# Round-10 window — the proposer's output (`python tools/freshness.py
-# --propose`: err rows > oldest-stale, here 1 err + 20 r05 + 29 r06)
-# with ONE deliberate swap mandated by the r9 verdict's
-# shared-component rule (SCALE.md §21): this round changes
-# `register_geotab_source` (the pushdown-conf fix), so its OTHER
-# dependent — `geotab_connector_pipeline`, green r08 and not
-# otherwise due — is pulled into the window right behind the erring
-# streaming twin, displacing the proposer's last r06 backfill entry
-# (`streaming_stream_join`, green r06, which rotates due at r11 with
-# the rest of its tier regardless). 1+1+20+28 = 50. After this
-# window: oldest ledger row r06; max staleness ≤ 4 rounds holds.
-_ROUND10_WINDOW: list[str] = [
-    # (a) the one err row (r09: DATA_SOURCE_PUSHDOWN_DISABLED, fixed
-    #     this round at the registration chokepoint)
-    "geotab_stream_pipeline",
-    # (b) shared-component rule: the batch twin of the changed source
-    "geotab_connector_pipeline",
-    # (c) the 20 r05 rows (ledger floor), proposer order
-    "null_safe_join",
-    "set_ops_multiset",
-    "partitioned_write_prune",
-    "linear_interpolate",
-    "streaming_sliding_window",
-    "compaction_plan",
-    "kaplan_meier",
-    "scd2_point_in_time",
-    "corrupt_record_audit",
-    "contrastive_pairs",
-    "training_batch_assembly",
-    "psi_drift",
-    "hotspot_regions",
-    "cusum_changepoint",
-    "boolean_retrieval",
-    "knn_accuracy",
-    "rolling_active_users",
-    "dedup_keep_best",
-    "quantized_rescore_topk",
-    "target_encoding",
-    # (d) the 28 oldest r06 rows (proposer order, minus the displaced
-    #     final entry)
-    "geotab_flagship",
-    "collect_array_agg",
-    "scan_filter_project",
-    "string_functions",
-    "math_functions",
-    "conditional_functions",
-    "json_functions",
-    "set_ops",
-    "distinct_values",
-    "text_stats",
-    "token_frequencies",
-    "percentiles",
-    "cube_agg",
-    "union_all_tagged",
-    "map_functions",
-    "struct_geojson",
-    "array_norms",
-    "haversine_distance",
-    "text_quality",
-    "multimodal_frame_sample",
-    "multimodal_decode_stats",
-    "range_join_events",
-    "salted_skew_join",
-    "chunk_documents",
-    "pivot_returnflag",
-    "grouping_sets",
-    "hash_sample",
-    "quality_filter_pipeline",
-]
-
-# Round-9 window — steady-state rotation, emitted VERBATIM by
-# `python tools/freshness.py --propose` per the round-8 verdict's
-# item 3 (the proposer was fixed in r8; its priority order is
-# reds > errs > never-checked > all-stale oldest-first):
-#   (a) `pca_project` — the repo's only red driver row ever
-#       (r08: the rows-only canonicalizer died on the raw
-#       `array<double>` proj8 column). Its output is now posexploded
-#       to scalar (vec_id, component_idx, loading) rows, and
-#       tests/test_registry_contract.py lints the whole rows-only
-#       tier against the failure class;
-#   (b) the 19 oldest ledger rows (r04 — the backfill tier the r8
-#       window left as the ledger floor), registration order;
-#   (c) 30 oldest r05 rows (registration order) as backfill.
-# 1+19+30 = 50. After this window: oldest ledger row r05 with 20
-# members; max staleness stays ≤ 4 rounds per the BASELINE.md r8
-# policy line. Registration order never changes; only the exported
-# ordering rotates.
-_ROUND9_WINDOW: list[str] = [
-    # (a) the one err row — front-loaded by the proposer
-    "pca_project",
-    # (b) the 19 r04 rows (ledger floor)
-    "volume_shipping",
-    "product_type_profit",
-    "important_parts",
-    "customer_order_distribution",
-    "promo_revenue_ratio",
-    "top_supplier_revenue",
-    "small_qty_revenue",
-    "large_volume_customers",
-    "disjunctive_filter_revenue",
-    "idle_rich_customers",
-    "bloom_semi_join",
-    "zorder_cluster",
-    "repeated_spans",
-    "skew_profile",
-    "corpus_datacard",
-    "distribution_drift",
-    "dq_audit",
-    "join_cardinality_estimate",
-    "geotab_stream_pipeline",
-    # (c) the 30 oldest r05 rows (registration order)
-    "stateful_user_stats",
-    "incremental_agg_merge",
-    "embedding_quantize",
-    "semdedup_buckets",
-    "k_anonymity",
-    "readability_scores",
-    "trip_segmentation",
-    "event_debounce",
-    "geofence_dwell",
-    "cdc_apply",
-    "kmv_distinct",
-    "count_min_freq",
-    "event_transitions",
-    "table_stats",
-    "snapshot_diff",
-    "rolling_p95",
-    "nested_assembly",
-    "rollup_cascade",
-    "retention_purge",
-    "late_data_audit",
-    "asof_nearest_clicks",
-    "attribution_last_touch",
-    "interval_merge",
-    "bm25_search",
-    "schema_evolution",
-    "entity_resolution",
-    "decile_lift",
-    "ab_test_zscore",
-    "logodds_terms",
-    "zonemap_pruning_eval",
-]
-
-
-# Round-8 window (round-7 came back 50/50 green — THIRD consecutive
-# all-green round; zero reds ever). This is the ledger-finishing
-# window the round-7 verdict specified item-for-item, emitted by the
-# FIXED `python tools/freshness.py --propose` (the old proposer
-# starved rows-only/never-checked entries behind the paired backlog;
-# priority is now reds > errs > never-paired > never-rows-only >
-# all-stale oldest-first merged > oldest-fresh backfill):
-#   (a) the 7 never-windowed rows-only queries — their FIRST driver
-#       rows ever (the driver records `err:no_oracle` rows-only
-#       checks; each already has a numpy/pure-Python pytest gate);
-#   (b) the 14 remaining pre-r4 stale rows, oldest-first: 1 r01 + 3
-#       r02 + 10 r03 (of which 6 oracle-paired — the last paired rows
-#       older than r4);
-#   (c) 29 oldest r04 rows (registration order) as backfill,
-#       including `recursive_order_chains` (verdict item 7: its
-#       execution path was touched by the r7 conf-restore fix).
-#       Verdict item 7's other member, `bucketed_colocated_join`,
-#       cannot fit: it holds an r07 green row (fresh), and swapping it
-#       in would leave 20 r04 rows — breaking item 1's "≤19 members"
-#       done-criterion. Its cold-cache re-verification ran locally
-#       instead (cache dir removed, oracle PASS, round-8 session) and
-#       its r8 code change (operators/bucketed.py hardening) is
-#       covered by 7 pytest plan/storage assertions.
-# 7+14+29 = 50. After this window: zero queries without a driver row
-# ever, zero paired rows older than r4, oldest ledger row r04 with 19
-# members — the verdict's "done" criterion exactly. Steady state from
-# round 9 on: 50 slots / 219 queries ⇒ worst-case staleness ≤ 5
-# rounds (policy recorded in BASELINE.md).
-_ROUND8_WINDOW: list[str] = [
-    # (a) first-ever driver rows — rows-only by design
-    "pca_project",
-    "pagerank_parts",
-    "bpe_learn_merges",
-    "logreg_train",
-    "ndcg_eval",
-    "holt_forecast",
-    "forecast_backtest",
-    # (b) pre-r4 stale rows, oldest-first (rows-only + the 6 paired)
-    "approx_distinct",
-    "lsh_ann_topk",
-    "ivf_ann_topk",
-    "kmeans_embeddings",
-    "minhash_near_dup",
-    "simhash_near_dup",
-    "approx_percentiles",
-    "hll_sketch_rollup",
-    "source_temperature_resample",
-    "streaming_session_window",
-    "udaf_weighted_median",
-    "fuzzy_match_customers",
-    "grouped_map_ewma",
-    "flagship_schema_contract",
-    # (c) oldest r04 rows (registration order)
-    "pricing_summary",
-    "embedding_topk",
-    "ngram_jaccard_pairs",
-    "embedding_near_dup",
-    "geotab_connector_pipeline",
-    "dedup_clusters",
-    "ann_recall_eval",
-    "minhash_recall_eval",
-    "recursive_order_chains",
-    "boilerplate_ngram_ratio",
-    "vocab_coverage",
-    "quality_adaptive_filter",
-    "heavy_hitters",
-    "skyline_pareto",
-    "market_share",
-    "weighted_sample_topk",
-    "unigram_logprob",
-    "geofence_contains",
-    "time_weighted_avg",
-    "cross_corpus_dedup",
-    "jsonl_ingest",
-    "csv_ingest",
-    "retention_cohorts",
-    "token_entropy",
-    "triangle_count",
-    "lateral_top_orders",
-    "seasonal_zscore",
-    "orc_ingest",
-    "association_rules",
-]
-
-
-# Round-7 window (round-6 came back 50/50 green — second consecutive
-# all-green round). Per the round-6 verdict's #1 item this window is
-# purely a freshness refresh: the 50 OLDEST stale oracle-paired rows,
-# exactly as proposed by `python tools/freshness.py --propose`
-# (priority: reds > errs > never-paired > stale-paired oldest-first;
-# there are no reds/errs/never-paired left, so it's the 17 r02-era +
-# 33 r03-era paired rows). After this window only 6 paired r03 rows +
-# 8 stale rows-only rows (+ the 7 never-windowed rows-only queries)
-# remain for round 8's window. Registration order never changes; only
-# this exported ordering rotates.
-_ROUND7_WINDOW: list[str] = [
-    # r02-era paired rows (deferred in earlier rotations as lowest
-    # regression risk — now the oldest rows in the ledger)
-    "exists_subquery",
-    "in_subquery",
-    "string_agg_sorted",
-    "window_distribution",
-    "conditional_agg",
-    "mode_median",
-    "posexplode_terms",
-    "histogram_buckets",
-    "regex_token_ops",
-    "linear_fit_stats",
-    "zscore_outliers",
-    "unpivot_metrics",
-    "shipping_priority",
-    "local_supplier_volume",
-    "forecast_revenue",
-    "returned_item_report",
-    "profile_lineitem",
-    # r03-era paired rows, registration order (core relational surface
-    # the verdict named: joins, windows, top-k, as-of, date functions)
-    "dedup_latest_events",
-    "group_agg_minmax",
-    "rollup_orders",
-    "join_large_fact",
-    "join_left_outer",
-    "join_semi",
-    "join_anti",
-    "join_broadcast_dims",
-    "asof_join_events_orders",
-    "date_functions",
-    "window_rank",
-    "window_lag_lead",
-    "window_running_agg",
-    "topk_global",
-    "topk_per_group",
-    "dedup_exact_docs",
-    "tumbling_window",
-    "correlated_subquery",
-    "sliding_window",
-    "session_window",
-    "streaming_tumbling_window",
-    "multimodal_metadata",
-    "doc_winnow_fingerprints",
-    "pii_redact",
-    "repetition_ratio",
-    "contamination_overlap",
-    "dedup_normalized",
-    "train_val_test_split",
-    "embedding_centroid_distance",
-    "mad_outliers",
-    "vin_filter",
-    "bucketed_colocated_join",
-    "udtf_top_terms",
-]
-
-
-# §21 guard pull after the round-18 close: the pushdown-conf cleanup in
-# pipeline/geotab.py::run_connector_pipeline implicates this query, which
-# the round-18 window does not cover (``python tools/window_guard.py``).
-# Front-loaded ahead of that window, so its last row (geofence_dwell)
-# rotates out of the 50-query prefix.
-_POST_R18_GUARD_PULLS: list[str] = ["geotab_connector_pipeline"]
-
-
-def _ordered_names() -> list[str]:
-    names = list(_REGISTRY)
-    head_lists = (
-        _POST_R18_GUARD_PULLS
-        + _ROUND18_WINDOW
-        + _ROUND17_WINDOW
-        + _ROUND16_WINDOW
-        + _ROUND15_WINDOW
-        + _ROUND14_WINDOW
-        + _ROUND13_WINDOW
-        + _ROUND12_WINDOW
-        + _ROUND11_WINDOW
-        + _ROUND10_WINDOW
-        + _ROUND9_WINDOW
-        + _ROUND8_WINDOW
-        + _ROUND7_WINDOW
-        + _ROUND6_WINDOW
-        + _ROUND_NEW
-        + _ROUND6_CARRY
-        + _R04_CHECKED
-        + _R02_REFRESH_PRIORITY
-        + _R02_REST
-        + _R01_REFRESH
-    )
-    seen: set[str] = set()
-    head = [n for n in head_lists if not (n in seen or seen.add(n))]
-    rest = [n for n in names if n not in seen and n not in _ROUND_DEFER]
-    return head + rest + sorted(n for n in _ROUND_DEFER if n not in seen)
-
-
 def queries() -> dict[str, QueryFn]:
-    return {name: _REGISTRY[name][0] for name in _ordered_names()}
+    return {name: fn for name, (fn, _) in _REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        name: _REGISTRY[name][1]
-        for name in _ordered_names()
-        if _REGISTRY[name][1] is not None
-    }
+    return {name: sql for name, (_, sql) in _REGISTRY.items() if sql is not None}
 
 
 def _materialize_once(prefix: str, sf: str, write_fn) -> str:

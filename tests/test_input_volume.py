@@ -135,12 +135,10 @@ def test_assert_replica_volume_rejects_wrong_volume(monkeypatch, bad_kind):
 
 # ------------------------------------ tool-side volume pins (r17 §26b)
 # The r16 verdict's "one tier out" sweep: the TOOLS' own inputs. A
-# DEPMAP generated over a truncated fixture would silently SHRINK the
-# guard's dependency sets (fail-open); a check_oracle run over one
-# would compare both engines on the same wrong data and agree. Both
-# now pin their inputs; the equality logic is covered here on fakes /
-# in-memory views (the assert_replica_volume precedent) plus one real
-# pass-path read each.
+# check_oracle run over a truncated fixture would compare both engines
+# on the same wrong data and agree, so it pins its inputs; the
+# equality logic is covered here on in-memory views (the
+# assert_replica_volume precedent) plus one real pass-path read.
 
 
 def test_check_oracle_volume_gate():
@@ -159,46 +157,13 @@ def test_check_oracle_volume_gate():
     assert bad == ["lineitem: 42 rows, pinned 6000"]
 
 
-def test_check_oracle_volume_gate_real_fixture():
+def test_check_oracle_volume_gate_real_fixture(sf_dir):
     """Pass-path through the real wiring: DuckDB views over the
     sf0.001 fixture vs the live pins — exactly what main() runs."""
     import check_oracle
 
-    con = duckdb.connect()
-    for t in EXPECTED_ROWS["sf0.001"]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('/root/testdata/sf0.001/{t}.parquet')"
-        )
-    assert check_oracle.volume_failures(
-        con, expected_for("/root/testdata/sf0.001")) == []
-
-
-def test_depmap_volume_gate(spark, sf_dir):
-    """depmap's pin reads through load_table (the traced queries'
-    read path). Exact pins pass on the real sf0.001 fixture; a
-    deliberately-wrong pin is reported with both counts."""
-    import depmap
-
-    pins = dict(EXPECTED_ROWS["sf0.001"])
-    assert depmap.volume_failures(spark, sf_dir, pins) == []
-    pins["events"] = 999_999
-    assert depmap.volume_failures(spark, sf_dir, pins) == [
-        "events: 1000 rows, pinned 999999"
-    ]
-
-
-def test_depmap_refuses_unpinned_dir():
-    """main() must fail-closed (rc 2) on a directory fixture_volumes
-    holds no pin for — asserted structurally: the None branch exists
-    before any tracing starts."""
-    import inspect
-
-    import depmap
-
-    src = inspect.getsource(depmap.main)
-    assert "expected_for" in src and "return 2" in src
-    assert src.index("expected_for") < src.index("_tracing = True")
+    con = check_oracle.connect(sf_dir)
+    assert check_oracle.volume_failures(con, expected_for(sf_dir)) == []
 
 
 # ---------------------- direct gates for the three uncovered rows-only

@@ -17,11 +17,10 @@ from tools.roundcheck import FAST, GATES, main  # noqa: E402
 def test_gate_registry_shape():
     # full-oracle and bench-diff are the only non-fast gates (the
     # latter needs a fresh worktree BENCH_FULL.json to mean anything),
-    # and execution order puts the diff-shaped gates (guard, lint)
-    # before the Spark suites
+    # and execution order puts the cheap lint before the Spark suites
     assert set(FAST) == set(GATES) - {"full-oracle", "bench-diff"}
     names = list(GATES)
-    assert names.index("guard") < names.index("window-oracle")
+    assert names.index("lint") < names.index("audit")
     assert names.index("lint") < names.index("pytest")
     for argv, desc, timeout_s in GATES.values():
         assert argv[0] == sys.executable and desc
@@ -29,7 +28,7 @@ def test_gate_registry_shape():
 
 
 def test_unknown_gate_rejected(capsys):
-    assert main(["--only", "guard,nope"]) == 2
+    assert main(["--only", "lint,nope"]) == 2
     assert "unknown gate" in capsys.readouterr().err
 
 

@@ -66,9 +66,8 @@ _PROBE_ORDER = ("py", "np", "bw", "mp")
 
 
 def default_baseline() -> str:
-    """The driver's last round-close commit (same grep as
-    window_guard.round_base_commit — inlined so this module stays a
-    zero-import-dependency script)."""
+    """The last round-close commit: the newest commit whose
+    subject starts with ``round N:``."""
     r = subprocess.run(
         [
             "git", "-C", REPO, "log", "-1", "--format=%H",

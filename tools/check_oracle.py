@@ -7,9 +7,10 @@ strings/ints/timestamps; exact for doubles too — our queries are
 engineered to be bit-deterministic cross-engine, so any float diff is
 a real bug, not noise).
 
-Usage: python tools/check_oracle.py [sf_dir] [query ...] [--window]
-(--window = the driver-verified 50-query prefix, i.e. this round's
-rotation window)
+Usage: python tools/check_oracle.py [sf_dir] [query ...]
+
+``tests/test_oracle.py`` runs the same ``compare`` for every paired
+query at sf0.001 inside the pytest suite.
 """
 
 from __future__ import annotations
@@ -17,11 +18,13 @@ from __future__ import annotations
 import math
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
+from etl_geotab_spark.blocks import release_all_cached  # noqa: E402
 from etl_geotab_spark.io import TABLES  # noqa: E402
 from etl_geotab_spark.session import get_spark  # noqa: E402
 import __spark_entry__ as entrymod  # noqa: E402
@@ -115,21 +118,12 @@ def volume_failures(con, pins: dict[str, int] | None) -> list[str]:
 
 
 def main() -> int:
-    # flags first, then positionals — sf_dir really is optional, so
-    # `check_oracle.py --window` must not consume the flag as sf_dir
-    # (r12 advice)
-    argv = sys.argv[1:]
-    window = "--window" in argv
-    positionals = [a for a in argv if a != "--window"]
+    positionals = sys.argv[1:]
     sf_dir = positionals[0] if positionals else "/root/testdata/sf0.01"
     only = set(positionals[1:])
 
     spark = get_spark("oracle-check")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = connect(sf_dir)
 
     # §26b input-volume pin on the ORACLE side (r16 verdict item 4):
     # a truncated fixture under the DuckDB views would make the
@@ -147,73 +141,21 @@ def main() -> int:
                   "to run the oracle gate over a wrong-volume fixture")
         return 2
 
-    qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    if window:
-        # the driver-verified prefix (the round's rotation window) —
-        # pre-validate exactly what the driver will record
-        only |= set(list(qs)[:50])
     failures = []
-    for name, fn in qs.items():
+    for name in entrymod.queries():
         if only and name not in only:
             continue
         t0 = time.time()
-        try:
-            sdf = fn(spark, sf_dir)
-            spark_cols = sdf.columns
-            spark_rows = [r.asDict() for r in sdf.collect()]
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL {name}: spark error: {e}")
-            failures.append(name)
-            continue
-        finally:
-            # same session hygiene as bench.py: a few operators persist
-            # intermediates; over a 100+-query session leaked blocks
-            # degrade whatever runs later
-            spark.catalog.clearCache()
-
-        if name not in oracles:
-            print(f"ok?  {name}: rows-only ({len(spark_rows)} rows, "
-                  f"{time.time()-t0:.1f}s) — no oracle")
-            continue
-
-        try:
-            rel = con.sql(oracles[name])
-            duck_cols = rel.columns
-            duck_rows = [dict(zip(duck_cols, r)) for r in rel.fetchall()]
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL {name}: duckdb error: {e}")
-            failures.append(name)
-            continue
-
-        problems = []
-        if len(spark_rows) != len(duck_rows):
-            problems.append(f"rowcount spark={len(spark_rows)} duck={len(duck_rows)}")
-        if sorted(spark_cols) != sorted(duck_cols):
-            problems.append(f"schema spark={sorted(spark_cols)} duck={sorted(duck_cols)}")
-        else:
-            cols = sorted(spark_cols)
-            ns, nd = normalize(spark_rows, cols), normalize(duck_rows, cols)
-            if ns != nd:
-                diffs = [
-                    (a, b) for a, b in zip(ns, nd) if a != b
-                ][:3]
-                problems.append(f"values differ; first diffs: {diffs}")
-            else:
-                # engine-NATIVE typed frames (re-executes both sides):
-                # rebuilding pandas frames from the collected Python
-                # rows would re-infer dtypes and mask e.g. HUGEINT
-                try:
-                    spark_pdf = sdf.toPandas()[cols]
-                    duck_pdf = con.sql(oracles[name]).df()[cols]
-                    problems.extend(typed_issues(spark_pdf, duck_pdf))
-                except Exception as e:  # noqa: BLE001
-                    problems.append(f"typed-frame fetch failed: {e}")
+        problems = compare(spark, con, name, sf_dir)
+        dt = time.time() - t0
         if problems:
             print(f"FAIL {name}: {'; '.join(problems)}")
             failures.append(name)
+        elif name not in oracles:
+            print(f"ok?  {name}: rows-only ({dt:.1f}s) — no oracle")
         else:
-            print(f"PASS {name} ({len(spark_rows)} rows, {time.time()-t0:.1f}s)")
+            print(f"PASS {name} ({dt:.1f}s)")
 
     print()
     if failures:
@@ -221,6 +163,67 @@ def main() -> int:
         return 1
     print("all green")
     return 0
+
+
+def connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per fixture table at sf_dir."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con
+
+
+def compare(spark, con, name: str, sf_dir: str) -> list[str]:
+    """Run query ``name`` on Spark and, if it has one, its oracle on
+    ``con``; return the problems found (empty = green). A rows-only
+    query is only run. Every block the query pinned is released before
+    returning, so a long session does not accumulate them."""
+    oracle = entrymod.oracle_sql().get(name)
+    try:
+        try:
+            sdf = entrymod.queries()[name](spark, sf_dir)
+            spark_cols = sdf.columns
+            spark_rows = [r.asDict() for r in sdf.collect()]
+        except Exception as e:  # noqa: BLE001
+            return [f"spark error: {e}"]
+        if oracle is None:
+            return []
+        try:
+            rel = con.sql(oracle)
+            duck_cols = rel.columns
+            duck_rows = [dict(zip(duck_cols, r)) for r in rel.fetchall()]
+        except Exception as e:  # noqa: BLE001
+            return [f"duckdb error: {e}"]
+
+        problems = []
+        if len(spark_rows) != len(duck_rows):
+            problems.append(f"rowcount spark={len(spark_rows)} duck={len(duck_rows)}")
+        if sorted(spark_cols) != sorted(duck_cols):
+            problems.append(f"schema spark={sorted(spark_cols)} duck={sorted(duck_cols)}")
+            return problems
+        cols = sorted(spark_cols)
+        ns, nd = normalize(spark_rows, cols), normalize(duck_rows, cols)
+        if ns != nd:
+            diffs = [(a, b) for a, b in zip(ns, nd) if a != b][:3]
+            problems.append(f"values differ; first diffs: {diffs}")
+            return problems
+        # engine-NATIVE typed frames (re-executes both sides):
+        # rebuilding pandas frames from the collected Python rows
+        # would re-infer dtypes and mask e.g. HUGEINT
+        try:
+            spark_pdf = sdf.toPandas()[cols]
+            duck_pdf = con.sql(oracle).df()[cols]
+            problems.extend(typed_issues(spark_pdf, duck_pdf))
+        except Exception as e:  # noqa: BLE001
+            problems.append(f"typed-frame fetch failed: {e}")
+        return problems
+    finally:
+        # same per-query exit as bench.py: operators persist and
+        # localCheckpoint intermediates; over a 200-query session the
+        # leaked blocks degrade whatever runs later
+        release_all_cached(spark)
 
 
 if __name__ == "__main__":

@@ -6,12 +6,7 @@ gate, so a round cannot close with a renewal silently forgotten.
 Gates, in order (each is an existing tool — this runner adds no new
 checking logic, only the choreography):
 
-  guard          tools/window_guard.py — §21 shared-component rule:
-                 every query implicated by the diff since the last
-                 round-close rides the current window prefix.
   lint           tools/scale_lint.py — harness-contract lint.
-  window-oracle  tools/check_oracle.py --window at sf0.01 — the
-                 driver-t2 replica over the 50-query rotation window.
   audit          tools/explain_audit.py — plan invariants (pushdown,
                  pruned ReadSchema, broadcast, no nested loops).
   bench-diff     [--full only] tools/bench_diff.py vs the last
@@ -23,7 +18,8 @@ checking logic, only the choreography):
                  self-compare as vacuous); run it after the round's
                  bench invocations.
   pytest         python -m pytest tests/ — the full unit/semantics
-                 suite.
+                 suite, including every paired query against its
+                 DuckDB oracle at sf0.001 (tests/test_oracle.py).
   full-oracle    [--full only] check_oracle over ALL paired queries
                  at sf0.01 — the §22 "renew anyway" whole-registry
                  record.
@@ -35,14 +31,14 @@ captured output tail rather than hanging the checklist.
 Usage:
     python tools/roundcheck.py                 # fast gates
     python tools/roundcheck.py --full          # + whole-registry oracle
-    python tools/roundcheck.py --only guard,lint
+    python tools/roundcheck.py --only lint,audit
     python tools/roundcheck.py --list          # print gate registry
 
-Exit 0 iff every selected gate passed. Wall cost: fast set ≈ 25 min
-(pytest ≈ 9.5 min, window oracle ≈ 4 min, audit ≈ 4 min, guard ≈ 1 min
-on a fresh DEPMAP); --full adds ≈ 12 min. Runs gates SEQUENTIALLY on
-purpose — two Spark suites sharing the box corrupt each other's
-timings and the pytest suite assumes a quiet box for its own probes.
+Exit 0 iff every selected gate passed. Wall cost on 4 cores: fast set
+≈ 12-22 min (pytest 7-18 min with host load, audit ≈ 4 min); --full
+adds ≈ 12 min. Runs gates SEQUENTIALLY on purpose — two Spark suites
+sharing the box corrupt each other's timings and the pytest suite
+assumes a quiet box for its own probes.
 """
 
 from __future__ import annotations
@@ -57,27 +53,17 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # name -> (argv, description, timeout_s). Order is execution order:
-# cheap, diff-shaped gates first so a broken round fails in seconds,
-# the whole-registry oracle last because it subsumes window-oracle.
+# cheap gates first so a broken round fails in seconds, the sf0.01
+# whole-registry oracle last.
 # Timeouts are ~3x each gate's documented wall cost (module
 # docstring) — generous enough that a slow box never trips them, but
 # a wedged JVM surfaces as a TIMEOUT verdict with its captured tail
 # instead of hanging the checklist forever (r14 advice).
 GATES: dict[str, tuple[list[str], str, int]] = {
-    "guard": (
-        [sys.executable, "tools/window_guard.py"],
-        "§21 shared-component rule (implicated ⊆ window)",
-        600,
-    ),
     "lint": (
         [sys.executable, "tools/scale_lint.py"],
         "harness-contract lint",
         600,
-    ),
-    "window-oracle": (
-        [sys.executable, "tools/check_oracle.py", "/root/testdata/sf0.01", "--window"],
-        "driver-t2 replica over the rotation window",
-        2400,
     ),
     "audit": (
         [sys.executable, "tools/explain_audit.py"],
