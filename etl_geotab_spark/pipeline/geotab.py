@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from etl_geotab_spark.blocks import release_checkpoint
 from etl_geotab_spark.functions.scalar import (
     callsign,
     geojson_point,
@@ -130,8 +131,16 @@ def run_connector_pipeline(
 ) -> DataFrame:
     """The reference's full ``control()`` dataflow (task.ts:124-295)
     end-to-end through the connector: three JSON-RPC entity scans
-    (partition-per-group, pushdown) → wire→relational adapters →
-    ``geotab_pipeline`` → feature rows.
+    (pushdown; each a few multi-group ``Get`` partitions) →
+    wire→relational adapters → ``geotab_pipeline`` → feature rows.
+
+    Each scan packs its groups into at most ``defaultParallelism // 3``
+    partitions (at least 1), one ``Get`` per partition: the three scans
+    run concurrently, so together they fill the cluster's slots at most
+    once — the rule Spark uses to pack small files into about
+    ``defaultParallelism`` splits. A task per group would pay the fixed
+    JVM↔Python crossing cost once per group for a handful of rows
+    (SCALE.md §7).
 
     ``materialize`` (default on) runs the three scans CONCURRENTLY and
     snapshots each into executor storage (``localCheckpoint``) before
@@ -147,8 +156,10 @@ def run_connector_pipeline(
     failure semantic a snapshot-consistent fetch wants (the reference's
     in-memory Maps fail the same way). RPC responses are fleet-bounded
     (one row per device/driver), so the materialization is small by
-    construction. Pass ``materialize=False`` to keep the fully lazy
-    single-plan form (used by plan-shape tests that assert pushdown).
+    construction. If one fetch fails, the checkpoints the others
+    completed are released before the error propagates. Pass
+    ``materialize=False`` to keep the fully lazy single-plan form (used
+    by plan-shape tests that assert pushdown).
 
     ``debug`` is the reference's DEBUG flag ("Print GeoJSON Features
     in logs", task.ts:76): when set, the feature frame is routed
@@ -164,6 +175,7 @@ def run_connector_pipeline(
     )
 
     register_geotab_source(spark)  # also turns on the pushdown gate conf
+    max_partitions = max(1, spark.sparkContext.defaultParallelism // 3)
 
     def read(entity: str, **opts):
         # Wire schemas are fixed constants (task.ts:12-55) — passing
@@ -176,6 +188,7 @@ def run_connector_pipeline(
             .option("transport", transport)
             .option("sessionid", session_id)
             .option("groups", ",".join(groups))
+            .option("maxpartitions", str(max_partitions))
         )
         for k, v in opts.items():
             r = r.option(k, v)
@@ -194,7 +207,13 @@ def run_connector_pipeline(
             return adapter(read(entity, **opts)).localCheckpoint(eager=True)
 
         with ThreadPoolExecutor(len(fetches)) as ex:
-            status, devices, drivers = ex.map(fetch, fetches)
+            futures = [ex.submit(fetch, spec) for spec in fetches]
+        done = [f.result() for f in futures if f.exception() is None]
+        if len(done) < len(futures):
+            for checkpoint in done:
+                release_checkpoint(checkpoint)
+            raise next(f.exception() for f in futures if f.exception() is not None)
+        status, devices, drivers = done
     else:
         status, devices, drivers = (
             adapter(read(entity, **opts)) for entity, adapter, opts in fetches

@@ -1627,8 +1627,9 @@ def _connector_oracle() -> str:
 def q_geotab_connector_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     """S1-S5 + S7 — the reference's full dataflow through the Python
     DataSource connector (sources/geotab.py): three JSON-RPC entity
-    scans (partition-per-group, filter pushdown into the RPC search
-    payload, deterministic fake transport) → wire→relational adapters →
+    scans (groups packed into slot-sized partitions, one multi-group
+    ``Get`` each; filter pushdown into the RPC search payload;
+    deterministic fake transport) → wire→relational adapters →
     geotab_pipeline → feature rows. Not sf-dependent (the source is the
     connector, not parquet) → rows-only; tests/test_sources.py covers
     pushdown, partitioning, union normalization, sink acks."""

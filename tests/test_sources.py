@@ -51,8 +51,112 @@ def test_partition_per_group(geotab):
     df = _read(geotab, "Device", groups="g1,g2,g3")
     assert df.rdd.getNumPartitions() == 3
     # group-membership pruning: only requested groups are fetched
-    ids = {r.id.rsplit("-", 2)[1] for r in df.collect()}
+    rows = df.collect()
+    ids = {r.id.rsplit("-", 2)[1] for r in rows}
     assert ids == {"g1", "g2", "g3"}
+    # packed: the same groups in 2 partitions fetch the same rows
+    packed = _read(geotab, "Device", groups="g1,g2,g3", maxpartitions="2")
+    assert packed.rdd.getNumPartitions() == 2
+    assert sorted(packed.collect()) == sorted(rows)
+
+
+def test_packed_partition_issues_one_get():
+    """Each partition of a packed scan is ONE multi-group ``Get`` whose
+    ``search.groups`` lists that partition's contiguous chunk."""
+    from etl_geotab_spark.sources.geotab import (
+        DEVICE_SCHEMA,
+        TRANSPORTS,
+        _fake_transport,
+    )
+
+    gets: list[list[str]] = []
+
+    def counting(endpoint, payload):
+        assert payload["method"] == "Get"
+        gets.append([g["id"] for g in payload["params"]["search"]["groups"]])
+        return _fake_transport(endpoint, payload)
+
+    TRANSPORTS["_test_counting"] = counting
+    try:
+        reader = GeotabReader(
+            DEVICE_SCHEMA,
+            {
+                "typename": "Device",
+                "transport": "_test_counting",
+                "groups": "g1,g2,g3,g4,g5",
+                "maxpartitions": "2",
+            },
+        )
+        parts = reader.partitions()
+        assert [p.groups for p in parts] == [("g1", "g2"), ("g3", "g4", "g5")]
+        for part in parts:
+            gets.clear()
+            rows = list(reader.read(part))
+            assert rows and gets == [list(part.groups)]
+    finally:
+        del TRANSPORTS["_test_counting"]
+
+
+def test_stream_poll_is_one_get():
+    """A stream poll reads every group with a single ``Get``."""
+    from etl_geotab_spark.sources.geotab import (
+        DEVICE_SCHEMA,
+        TRANSPORTS,
+        GeotabStreamReader,
+        _fake_transport,
+    )
+
+    gets: list[list[str]] = []
+
+    def counting(endpoint, payload):
+        gets.append([g["id"] for g in payload["params"]["search"]["groups"]])
+        return _fake_transport(endpoint, payload)
+
+    TRANSPORTS["_test_stream_counting"] = counting
+    try:
+        reader = GeotabStreamReader(
+            DEVICE_SCHEMA,
+            {"typename": "Device", "transport": "_test_stream_counting", "groups": "g1,g2,g3"},
+        )
+        rows, offset = reader.read(reader.initialOffset())
+        assert list(rows) and offset == {"poll": 1}
+    finally:
+        del TRANSPORTS["_test_stream_counting"]
+    assert gets == [["g1", "g2", "g3"]]
+
+
+@pytest.mark.parametrize("bad", ["0", "-1", "x"])
+def test_maxpartitions_must_be_positive_int(bad):
+    from etl_geotab_spark.sources.geotab import DEVICE_SCHEMA
+
+    with pytest.raises(ValueError, match="maxpartitions"):
+        GeotabReader(
+            DEVICE_SCHEMA,
+            {"typename": "Device", "groups": "g1,g2", "maxpartitions": bad},
+        )
+
+
+def test_fake_multi_group_get_concatenates_single_group_gets():
+    """The oracle replay (``_fake_wire_rows``) issues one Get over all
+    groups; that equals the reader's per-chunk Gets only because the
+    fake answers a multi-group search with the concatenation of its
+    single-group answers."""
+    from etl_geotab_spark.sources.geotab import _fake_transport
+
+    def get(*groups):
+        return _fake_transport(
+            "",
+            {
+                "method": "Get",
+                "params": {
+                    "typeName": "DeviceStatusInfo",
+                    "credentials": {"sessionId": "s"},
+                    "search": {"groups": [{"id": g} for g in groups]},
+                },
+            },
+        )["result"]
+
+    assert get("g1", "g2") == get("g1") + get("g2")
 
 
 def test_filter_pushdown_translates_to_search(geotab):
@@ -222,7 +326,7 @@ def test_semantic_error_does_not_relogin():
             },
         )
         with pytest.raises(RuntimeError, match="UnknownTypeName"):
-            list(reader.read(_GroupPartition("g1")))
+            list(reader.read(_GroupPartition(("g1",))))
     finally:
         del TRANSPORTS["_test_semantic"]
     assert log == ["Get"]  # no Authenticate, no second Get
@@ -309,7 +413,7 @@ def test_scan_relogin_on_expired_session():
                 "password": "pw",
             },
         )
-        rows = list(reader.read(_GroupPartition("g1")))
+        rows = list(reader.read(_GroupPartition(("g1",))))
     finally:
         del TRANSPORTS["_test_expiring"]
     assert rows  # recovered: fresh session returned data
@@ -335,7 +439,7 @@ def test_scan_without_password_fails_fast_on_dead_session():
             {"typename": "Device", "transport": "_test_invalid"},
         )
         with pytest.raises(RuntimeError, match="InvalidUserException"):
-            list(reader.read(_GroupPartition("g1")))
+            list(reader.read(_GroupPartition(("g1",))))
     finally:
         del TRANSPORTS["_test_invalid"]
 
@@ -589,6 +693,50 @@ def test_debug_flag_routes_through_debug_sink(geotab, capsys):
     out = capsys.readouterr().out
     assert "callsign" in out and "geotab-" in out  # schema + sample logged
     assert rows_debug == rows_quiet  # passthrough: result unchanged
+
+
+def test_connector_pipeline_scans_fill_slots_once(geotab, monkeypatch):
+    """Tick shape: the three checkpointed scans each have
+    ``min(groups, max(1, defaultParallelism // 3))`` partitions — not
+    one Python task per group."""
+    from etl_geotab_spark.blocks import release_checkpoint
+    from etl_geotab_spark.pipeline.geotab import run_connector_pipeline
+
+    checkpoints: list = []
+    DataFrame = type(geotab.range(1))  # the session's concrete class
+    local_checkpoint = DataFrame.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        checkpoints.append(local_checkpoint(self, *args, **kwargs))
+        return checkpoints[-1]
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", spy)
+    groups = tuple(f"g{i}" for i in range(1, 9))
+    run_connector_pipeline(geotab, groups=groups)
+    monkeypatch.undo()
+    try:
+        expected = min(8, max(1, geotab.sparkContext.defaultParallelism // 3))
+        assert [c.rdd.getNumPartitions() for c in checkpoints] == [expected] * 3
+    finally:
+        for c in checkpoints:
+            release_checkpoint(c)
+
+
+def test_connector_pipeline_fetch_error_releases_checkpoints(geotab, monkeypatch):
+    """When one of the three concurrent fetches raises, the checkpoints
+    the other two completed are released before the error propagates."""
+    import etl_geotab_spark.sources.geotab as source
+    from etl_geotab_spark.blocks import persistent_rdd_count
+    from etl_geotab_spark.pipeline.geotab import run_connector_pipeline
+
+    def broken(df):
+        raise RuntimeError("drivers adapter failed")
+
+    monkeypatch.setattr(source, "drivers_relational", broken)
+    before = persistent_rdd_count(geotab)
+    with pytest.raises(RuntimeError, match="drivers adapter failed"):
+        run_connector_pipeline(geotab, groups=("g1", "g2"))
+    assert persistent_rdd_count(geotab) == before
 
 
 def test_streaming_connector_pipeline_to_rest_sink(geotab, tmp_path):
