@@ -67,10 +67,11 @@ per-query breakdown (all queries) is written to ``BENCH_FULL.json``
 in the repo root instead; ``value`` still totals ALL queries so the
 headline number is comparable across rounds.
 
-Each query is forced end-to-end with a noop write (full computation,
-no driver collect overhead). A warmup query first absorbs JVM/codegen
-startup so per-query numbers measure the plan, not the JIT. The cache
-is cleared between queries: several operators persist() intermediates
+Each query runs through ``etl_geotab_spark.run``: forced end-to-end
+with a noop write (full computation, no driver collect overhead),
+after a warm-up that absorbs JVM/codegen startup so per-query numbers
+measure the plan, not the JIT. Every cached plan and pinned block is
+released between queries: several operators persist() intermediates
 (band tables, candidate sets) and never unpersist — over a 100-query
 run those stale blocks accumulate, evict each other, and poison the
 timings of whatever runs late in the session (r02 measured minhash at
@@ -79,7 +80,6 @@ timings of whatever runs late in the session (r02 measured minhash at
 
 from __future__ import annotations
 
-import gc
 import json
 import os
 import sys
@@ -100,7 +100,8 @@ from tools.boxcal import (  # noqa: E402,F401
     mini_probe,
     sustain_probe,
 )
-from etl_geotab_spark.blocks import release_all_cached  # noqa: E402
+from etl_geotab_spark.run import force, run, scope, warm  # noqa: E402
+from tools.fixture_volumes import expected_for  # noqa: E402
 
 # One representative per operator family (SURVEY.md §2), weighted
 # toward the expensive similarity / streaming / connector paths the
@@ -196,11 +197,6 @@ def tainted_consumers(
     )
 
 
-def force(df) -> int:
-    df.write.format("noop").mode("overwrite").save()
-    return 0
-
-
 def probe_sec(spark) -> float:
     """JIT code-cache sentinel: one FIXED pure-JVM plan (same codegen
     classes every time), timed at suite checkpoints. The reserved code
@@ -221,7 +217,7 @@ def probe_sec(spark) -> float:
     best = float("inf")
     for _ in range(2):
         t0 = time.time()
-        (
+        force(
             spark.range(0, 2_000_000, 1, 8)
             .select(
                 (F.col("id") % 997).alias("k"),
@@ -229,10 +225,27 @@ def probe_sec(spark) -> float:
             )
             .groupBy("k")
             .agg(F.sum("v"), F.avg("v"), F.max("v"))
-            .write.format("noop").mode("overwrite").save()
         )
         best = min(best, time.time() - t0)
     return round(best, 3)
+
+
+def _probe_pool():
+    """Window-probe pool (r17 verdict item 2): created+warmed BEFORE
+    the JVM exists so the fork is cheap and no JVM thread state is
+    inherited; held idle between windows (sleeping workers cost
+    nothing). mini_probe runs between queries, outside every timed
+    region. None when unavailable — never worth failing a run."""
+    try:
+        import multiprocessing as _mp
+
+        ncpu = os.cpu_count() or 1
+        pool = _mp.Pool(ncpu)
+        pool.map(_mini_task, range(ncpu))  # discarded warm wave
+        return pool
+    except Exception as e:  # noqa: BLE001
+        print(f"bench: window-probe pool unavailable: {e}", file=sys.stderr)
+        return None
 
 
 def run_one(sf_dir: str) -> dict:
@@ -246,214 +259,86 @@ def run_one(sf_dir: str) -> dict:
     12.5 s) with the drift probe at 2.7× — the classic silent-flush
     signature BASELINE.md r4 documents. A fresh JVM per run keeps the
     passes i.i.d. and each inside the code-cache budget."""
-    # Window-probe pool (r17 verdict item 2): created+warmed BEFORE the
-    # JVM exists so the fork is cheap and no JVM thread state is
-    # inherited; held idle between windows (sleeping workers cost
-    # nothing). mini_probe runs between queries, outside every timed
-    # region — per-query methodology is unchanged.
-    probe_pool = None
+    probe_pool = _probe_pool()
+    spark = None
     try:
-        import multiprocessing as _mp
+        spark = get_spark("etl-geotab-spark-bench")
+        spark.sparkContext.setLogLevel("ERROR")
+        qs = entrymod.queries()
+        # (a)-(f) first-of-family session costs, see etl_geotab_spark.run
+        rows = warm(spark, sf_dir)
+        # §26b input-volume pin (SCALE.md §27): a truncated fixture must
+        # fail the invocation loudly, never produce a silently-fast
+        # record. Unknown dirs (no pin) skip the gate rather than guess.
+        want = expected_for(sf_dir)
+        for t, n in rows.items():
+            if want is not None and n != want[t]:
+                raise SystemExit(
+                    f"bench: {sf_dir}/{t} holds {n} rows, pinned "
+                    f"{want[t]} — refusing to record a bench over the "
+                    "wrong input volume"
+                )
 
-        _ncpu = os.cpu_count() or 1
-        probe_pool = _mp.Pool(_ncpu)
-        probe_pool.map(_mini_task, range(_ncpu))  # discarded warm wave
-    except Exception as e:  # probe pool is never worth failing a run
-        print(f"bench: window-probe pool unavailable: {e}", file=sys.stderr)
-        probe_pool = None
+        # (g) session-shared materializations, TIMED and reported — see
+        # module docstring. Each bench run is its own process, so the
+        # PID-namespaced scratch is cold here and the build cost is real;
+        # paying it in the preamble makes every sharer's per-query number
+        # its marginal cost instead of a suite-order lottery.
+        from etl_geotab_spark.queries import _ann_eval_table, _dedup_labeled_table
 
-    spark = get_spark("etl-geotab-spark-bench")
-    spark.sparkContext.setLogLevel("ERROR")
+        shared_builds: dict[str, float] = {}
+        for bname, bfn in (
+            ("dedup_labeled_table", _dedup_labeled_table),
+            ("ann_eval_table", _ann_eval_table),
+        ):
+            with scope(spark, bname):
+                t0 = time.time()
+                try:
+                    force(bfn(spark, sf_dir))
+                    shared_builds[bname] = round(time.time() - t0, 3)
+                except Exception as e:  # noqa: BLE001
+                    print(f"bench error in shared build {bname}: {e}", file=sys.stderr)
+                    shared_builds[bname] = -1.0
 
-    qs = entrymod.queries()
-
-    # Warmup — absorb one-time session costs so per-query numbers
-    # measure the PLAN, not cold start: (a) flagship for JVM/codegen,
-    # (b) a zero-column count per fixture table for file-listing +
-    # footer caches (the round-4 window fronts heavy documents/
-    # embeddings queries that otherwise eat this), (c) one tiny Arrow
-    # batch to spin up the Python worker pool the pandas-UDF operators
-    # reuse.
-    force(qs["geotab_flagship"](spark, sf_dir))
-    from pyspark.sql import functions as _F
-
-    from etl_geotab_spark.io import TABLES, load_table
-
-    from tools.fixture_volumes import expected_for
-
-    _want = expected_for(sf_dir)
-    for t in TABLES:
-        # FULL-WIDTH touch, not a zero-column count: footer/listing
-        # caches alone leave the data pages cold, and whichever query
-        # first scans a table's full width was paying the one-time OS
-        # page-cache fill (measured on pricing_summary: 2.1-2.4 s cold
-        # vs 1.8-1.9 s warm). One cheap max() per column reads every
-        # column chunk exactly once; the cost belongs to the session.
-        df = load_table(spark, sf_dir, t)
-        row = df.agg(
-            _F.count(_F.lit(1)), *[_F.max(c) for c in df.columns]
-        ).collect()[0]
-        # §26b input-volume pin (SCALE.md §27): the count is already
-        # in hand — a truncated fixture must fail the invocation
-        # loudly, never produce a silently-fast record. Unknown dirs
-        # (no pin) skip the gate rather than guess.
-        if _want is not None and row[0] != _want[t]:
-            raise SystemExit(
-                f"bench: {sf_dir}/{t} holds {row[0]} rows, pinned "
-                f"{_want[t]} — refusing to record a bench over the "
-                "wrong input volume"
-            )
-    from pyspark.sql import functions as F
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    _ident = pandas_udf(lambda s: s, "long")
-    spark.range(64).select(_ident(F.col("id"))).count()
-    # (d) one tiny Python-DataSource scan: the FIRST datasource action
-    # in a session pays one-time machinery costs (worker-module
-    # imports, noop-writer codegen for the scan shape) that belong to
-    # the session, not to whichever query runs first — same rationale
-    # as the pandas-UDF pool warmup above. The per-load planner worker
-    # spawns are NOT absorbed here; the connector row still pays those
-    # every invocation (that's its real recurring cost).
-    from etl_geotab_spark.sources.geotab import _SCHEMAS, register_geotab_source
-
-    register_geotab_source(spark)
-    force(
-        spark.read.format("geotab")
-        .schema(_SCHEMAS["Device"])
-        .option("typename", "Device")
-        .option("transport", "fake")
-        .option("sessionid", "bench-warmup")
-        .load()
-    )
-    # (e) two expression-family JIT probes, same rationale as (a)-(d):
-    # the FIRST plan in a session that embeds a higher-order-function
-    # chain (tokenize/filter lambdas) or the range-partitioned rownum
-    # machinery pays ~2-3 s of Janino+JIT warmup that transfers to
-    # every later plan of that family (measured: size(tokenize) 2.7 s
-    # first use, <1 s for every HOF plan after). Which query absorbs
-    # it is an artifact of suite ORDER — the correctness window fronts
-    # documents-family queries — so absorb it here and let per-query
-    # numbers measure plans.
-    from etl_geotab_spark.functions.text import tokenize
-
-    spark.createDataFrame([("a b c",)], "t string").select(
-        F.size(tokenize(F.col("t"))).alias("n")
-    ).groupBy("n").count().count()
-    from etl_geotab_spark.operators.rownum import ordered_prefix_sum
-
-    ordered_prefix_sum(
-        spark.range(128).select(F.col("id").alias("k"), F.lit(1).alias("v")),
-        ["k"],
-        "v",
-    ).count()
-    spark.catalog.clearCache()
-
-    # (f2) one tiny AvailableNow streaming drain: the FIRST readStream
-    # execution in a session pays ~2 s of Structured Streaming
-    # machinery setup (micro-batch engine threads, checkpoint/state
-    # scaffolding) that later streams don't — measured isolated N=5 at
-    # sf0.1: first 2.97 s, then 1.25/1.01/1.04/0.92 s. Which suite
-    # query absorbed it was an artifact of window rotation (r7 put
-    # streaming_tumbling_window first among the readStream queries and
-    # its number doubled vs r6 with zero code change — BASELINE.md r8
-    # A/B row); absorb it here like every other first-of-family cost.
-    import tempfile as _tf
-
-    from etl_geotab_spark.streaming import run_to_memory_table
-
-    _warm_dir = os.path.join(
-        _tf.gettempdir(), f"bench_stream_warm_{os.getpid()}"
-    )
-    spark.range(8).selectExpr(
-        "timestamp'2024-01-01 00:00:00' + make_interval(0,0,0,0,0,id,0) as ts",
-        "cast(id as double) as value",
-    ).write.mode("overwrite").parquet(_warm_dir)
-    run_to_memory_table(
-        spark.readStream.schema("ts timestamp, value double")
-        .parquet(_warm_dir)
-        .withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "5 minutes"))
-        .count(),
-        query_name=f"bench_warm_{os.getpid()}",
-    ).count()
-    # drained and never read again — remove now (the pid-stamped name
-    # defeats overwrite-mode reclamation, so leaving it leaks one dir
-    # per bench subprocess)
-    import shutil as _sh
-
-    _sh.rmtree(_warm_dir, ignore_errors=True)
-
-    # (f) session-shared materializations, TIMED and reported — see
-    # module docstring. Each bench run is its own process, so the
-    # PID-namespaced scratch is cold here and the build cost is real;
-    # paying it in the preamble makes every sharer's per-query number
-    # its marginal cost instead of a suite-order lottery.
-    from etl_geotab_spark.queries import _ann_eval_table, _dedup_labeled_table
-
-    shared_builds: dict[str, float] = {}
-    for bname, bfn in (
-        ("dedup_labeled_table", _dedup_labeled_table),
-        ("ann_eval_table", _ann_eval_table),
-    ):
-        t0 = time.time()
-        try:
-            force(bfn(spark, sf_dir))
-            shared_builds[bname] = round(time.time() - t0, 3)
-        except Exception as e:  # noqa: BLE001
-            print(f"bench error in shared build {bname}: {e}", file=sys.stderr)
-            shared_builds[bname] = -1.0
-        spark.catalog.clearCache()
-        spark._jvm.System.gc()
-        gc.collect()
-
-    n_total = len(qs)
-    checkpoints = {max(0, round(n_total * f) - 1) for f in (0.25, 0.5, 0.75, 1.0)}
-    probe_sec(spark)  # compile the probe plan; baseline is the 2nd call
-    baseline_probe = probe_sec(spark)
-    timings: dict[str, float] = {}
-    probes: list[float] = [baseline_probe]
-    # Interleaved window probes (r17 verdict item 2): a ~0.1 s box
-    # probe every PROBE_EVERY queries (plus one before the first and
-    # one after the last), run OUTSIDE every timed region. Each record
-    # is {"after": i, "py": s, "mp": s} — the probe ran after query
-    # index i (-1 = before the suite). Queries measured between two
-    # probes where either endpoint reads degraded (>2x the run's
-    # median) are flagged, so a judge can separate host phase from
-    # code per QUERY instead of per run.
-    PROBE_EVERY = 12
-    win_probes: list[dict] = [{"after": -1, **mini_probe(probe_pool)}]
-    pinned: dict[str, int] = {}
-    for i, (name, fn) in enumerate(qs.items()):
-        t0 = time.time()
-        try:
-            force(fn(spark, sf_dir))
-            timings[name] = round(time.time() - t0, 3)
-        except Exception as e:  # noqa: BLE001
-            print(f"bench error in {name}: {e}", file=sys.stderr)
-            timings[name] = -1.0
-        # Session hygiene between queries — measured, not theoretical:
-        # without it, queries running ~90th in the suite clock 3-5x
-        # their isolated time (ngram_jaccard 16.9s vs 3.5s). Causes:
-        # persisted plans, localCheckpoint RDD blocks (iterative
-        # operators) and Python-side plan handles. release_all_cached
-        # (r17 verdict item 3) deterministically unpersists BOTH
-        # cached plans and surviving RDD blocks — previously the
-        # checkpoint blocks waited for ContextCleaner/GC; the
-        # System.gc + gc.collect stay for the py4j handle release.
-        n_rel = release_all_cached(spark)
-        if n_rel > 0:
-            pinned[name] = n_rel
-        spark._jvm.System.gc()
-        gc.collect()
-        if i in checkpoints:
-            probes.append(probe_sec(spark))
-        if (i + 1) % PROBE_EVERY == 0 or i == n_total - 1:
-            win_probes.append({"after": i, **mini_probe(probe_pool)})
-    spark.stop()
-    if probe_pool is not None:
-        probe_pool.close()
-        probe_pool.join()
+        n_total = len(qs)
+        checkpoints = {max(0, round(n_total * f) - 1) for f in (0.25, 0.5, 0.75, 1.0)}
+        probe_sec(spark)  # compile the probe plan; baseline is the 2nd call
+        baseline_probe = probe_sec(spark)
+        timings: dict[str, float] = {}
+        probes: list[float] = [baseline_probe]
+        # Interleaved window probes (r17 verdict item 2): a ~0.1 s box
+        # probe every PROBE_EVERY queries (plus one before the first and
+        # one after the last), run OUTSIDE every timed region. Each record
+        # is {"after": i, "py": s, "mp": s} — the probe ran after query
+        # index i (-1 = before the suite). Queries measured between two
+        # probes where either endpoint reads degraded (>2x the run's
+        # median) are flagged, so a judge can separate host phase from
+        # code per QUERY instead of per run.
+        PROBE_EVERY = 12
+        win_probes: list[dict] = [{"after": -1, **mini_probe(probe_pool)}]
+        pinned: dict[str, int] = {}
+        for i, name in enumerate(qs):
+            # the runner's per-query exit releases every cached plan and
+            # RDD block the query left (without it, queries ~90th in the
+            # suite clocked 3-5x their isolated time) outside the timing
+            rec = run(spark, name, sf_dir)
+            if rec["error"] is not None:
+                print(f"bench error in {name}: {rec['error']}", file=sys.stderr)
+                timings[name] = -1.0
+            else:
+                timings[name] = rec["wall_s"]
+            if rec["released"] > 0:
+                pinned[name] = rec["released"]
+            if i in checkpoints:
+                probes.append(probe_sec(spark))
+            if (i + 1) % PROBE_EVERY == 0 or i == n_total - 1:
+                win_probes.append({"after": i, **mini_probe(probe_pool)})
+    finally:
+        if spark is not None:
+            spark.stop()
+        if probe_pool is not None:
+            probe_pool.terminate()
+            probe_pool.join()
     # Flag queries measured in a degraded window: for query index i the
     # enclosing probes are the last with after < i and the first with
     # after >= i; degraded = py or mp above 2x the run's MEDIAN reading.

@@ -21,7 +21,8 @@ Two leak classes this module closes (r17 verdict item 3):
    query. ``release_all_cached`` is the per-query-exit hook: it clears
    the catalog cache (persisted plans) AND unpersists every surviving
    RDD block (localCheckpoint blocks are plain persisted RDDs the
-   catalog cache does not track). bench.py calls it between queries.
+   catalog cache does not track). ``run.scope`` calls it on every
+   query's exit.
 
 Both helpers go through private seams (``_jdf``/``_jsc``) because
 PySpark exposes no public API for "the RDD behind this checkpointed

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from etl_geotab_spark.blocks import release_checkpoint
 from etl_geotab_spark.io import load_table, register_views
 from etl_geotab_spark.functions.scalar import (
     callsign,
@@ -5030,6 +5031,10 @@ def q_recursive_order_chains(spark: SparkSession, sf: str) -> DataFrame:
             spark.conf.unset(_key)
         else:
             spark.conf.set(_key, _prev)
+    # the eager chain checkpoint has no lineage back to the edge list:
+    # unpin it and drop the view that still names it
+    release_checkpoint(edges)
+    spark.catalog.dropTempView("_order_edges_r4")
     return chain.groupBy("o_custkey").agg(
         F.max("depth").alias("chain_len"),
         F.count(F.lit(1)).alias("n_orders"),

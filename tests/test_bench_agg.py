@@ -243,3 +243,59 @@ def test_sustain_probe_shape():
         assert 0.0 < s["sustain_last5_per_wave"] < 300.0
         expected = s["sustain_last5_per_wave"] / s["sustain_first5_per_wave"]
         assert abs(s["sustain_ratio"] - expected) < 0.02
+
+
+def _fake_pool():
+    class FakePool:
+        terminated = joined = False
+
+        def terminate(self):
+            self.terminated = True
+
+        def join(self):
+            self.joined = True
+
+    return FakePool()
+
+
+def test_run_one_terminates_probe_pool_when_session_fails(monkeypatch):
+    import pytest
+
+    import bench
+
+    pool = _fake_pool()
+    monkeypatch.setattr(bench, "_probe_pool", lambda: pool)
+
+    def no_session(*a, **k):
+        raise RuntimeError("no session")
+
+    monkeypatch.setattr(bench, "get_spark", no_session)
+    with pytest.raises(RuntimeError, match="no session"):
+        bench.run_one("unused")
+    assert pool.terminated and pool.joined
+
+
+def test_run_one_stops_session_when_warmup_fails(monkeypatch):
+    from types import SimpleNamespace
+
+    import pytest
+
+    import bench
+
+    pool = _fake_pool()
+    stopped = []
+    spark = SimpleNamespace(
+        sparkContext=SimpleNamespace(setLogLevel=lambda level: None),
+        stop=lambda: stopped.append(True),
+    )
+    monkeypatch.setattr(bench, "_probe_pool", lambda: pool)
+    monkeypatch.setattr(bench, "get_spark", lambda *a, **k: spark)
+
+    def broken_warm(spark, sf_dir):
+        raise RuntimeError("warm-up failed")
+
+    monkeypatch.setattr(bench, "warm", broken_warm)
+    with pytest.raises(RuntimeError, match="warm-up failed"):
+        bench.run_one("unused")
+    assert stopped == [True]
+    assert pool.terminated and pool.joined

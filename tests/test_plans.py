@@ -12,8 +12,9 @@ and at much higher cost.
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from tools.explain_audit import audit_plans  # noqa: E402
 
@@ -118,9 +119,10 @@ def test_block_release_helpers(spark):
 
 
 def test_iterative_operators_bound_pinned_blocks(spark):
-    """The iterative operators (pagerank, connected components, BPE)
-    release each superseded round's checkpoint (guide §5): after the
-    result materializes, the session must hold O(1) pinned RDDs —
+    """The iterative operators (pagerank, connected components, BPE,
+    the recursive order chains) release each superseded checkpoint
+    (guide §5): after the result materializes, the session must hold
+    O(1) pinned RDDs —
     loop-invariants plus the final state — never O(rounds) copies."""
     from pyspark.sql import functions as F
 
@@ -151,3 +153,13 @@ def test_iterative_operators_bound_pinned_blocks(spark):
     n = release_all_cached(spark)
     assert n >= 1
     assert persistent_rdd_count(spark) == 0
+
+    # recursive_order_chains unpins its edge-list checkpoint once the
+    # eager chain checkpoint exists: the chain is all that stays
+    from etl_geotab_spark.queries import q_recursive_order_chains
+
+    q_recursive_order_chains(spark, SF_DIR).write.format("noop").mode(
+        "overwrite"
+    ).save()
+    assert persistent_rdd_count(spark) == 1
+    release_all_cached(spark)

@@ -24,8 +24,8 @@ import duckdb
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-from etl_geotab_spark.blocks import release_all_cached  # noqa: E402
 from etl_geotab_spark.io import TABLES  # noqa: E402
+from etl_geotab_spark.run import scope  # noqa: E402
 from etl_geotab_spark.session import get_spark  # noqa: E402
 import __spark_entry__ as entrymod  # noqa: E402
 
@@ -178,10 +178,11 @@ def connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
 def compare(spark, con, name: str, sf_dir: str) -> list[str]:
     """Run query ``name`` on Spark and, if it has one, its oracle on
     ``con``; return the problems found (empty = green). A rows-only
-    query is only run. Every block the query pinned is released before
-    returning, so a long session does not accumulate them."""
+    query is only run. Both Spark executions (the collect and the typed
+    re-run, which reads any checkpoint the query pinned) run inside the
+    runner's per-query scope, so its blocks are released on return."""
     oracle = entrymod.oracle_sql().get(name)
-    try:
+    with scope(spark, name):
         try:
             sdf = entrymod.queries()[name](spark, sf_dir)
             spark_cols = sdf.columns
@@ -219,11 +220,6 @@ def compare(spark, con, name: str, sf_dir: str) -> list[str]:
         except Exception as e:  # noqa: BLE001
             problems.append(f"typed-frame fetch failed: {e}")
         return problems
-    finally:
-        # same per-query exit as bench.py: operators persist and
-        # localCheckpoint intermediates; over a 200-query session the
-        # leaked blocks degrade whatever runs later
-        release_all_cached(spark)
 
 
 if __name__ == "__main__":

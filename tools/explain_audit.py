@@ -23,8 +23,9 @@ import contextlib
 import io
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from etl_geotab_spark.session import get_spark  # noqa: E402
 import __spark_entry__ as entrymod  # noqa: E402

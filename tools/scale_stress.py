@@ -48,13 +48,13 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
 from etl_geotab_spark.io import load_table  # noqa: E402
+from etl_geotab_spark.run import run as run_query  # noqa: E402
 from etl_geotab_spark.session import get_spark  # noqa: E402
 
 SRC = "/root/testdata/sf0.1"
@@ -489,29 +489,19 @@ def cold_warm(run_once, n: int = 2) -> tuple[float, float]:
     return times[0], min(times)
 
 
-def _timed(spark, qs, name: str, sf_dir: str) -> tuple[float, float]:
+def _timed(spark, name: str, sf_dir: str) -> tuple[float, float]:
     def run_once() -> float:
-        t0 = time.time()
-        qs[name](spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        dt = round(time.time() - t0, 3)
-        spark.catalog.clearCache()
-        spark._jvm.System.gc()
-        return dt
+        rec = run_query(spark, name, sf_dir)
+        if rec["error"] is not None:
+            raise RuntimeError(f"{name} at {sf_dir}: {rec['error']}")
+        return rec["wall_s"]
 
     return cold_warm(run_once)  # see cold_warm: two-tier ratios
 
 
 def run() -> None:
-    import __spark_entry__ as entrymod
-
     spark = get_spark("etl-geotab-scale-stress")
     spark.sparkContext.setLogLevel("ERROR")
-    qs = entrymod.queries()
-
-    def timed(name: str, sf_dir: str) -> tuple[float, float]:
-        return _timed(spark, qs, name, sf_dir)
 
     # input-volume gate BEFORE any timing: a partial or stale
     # scratch_sf1 would silently deflate every ratio (see
@@ -520,8 +510,8 @@ def run() -> None:
     assert_replica_volume(spark)
     out: dict[str, dict] = {}
     for name in STRESS:
-        base_cold, base = timed(name, SRC)
-        big_cold, big = timed(name, OUT)
+        base_cold, base = _timed(spark, name, SRC)
+        big_cold, big = _timed(spark, name, OUT)
         ratio = round(big / base, 2) if base > 0 else -1.0
         ratio_cold = round(big_cold / base_cold, 2) if base_cold > 0 else -1.0
         out[name] = {
@@ -564,12 +554,9 @@ def exponent() -> None:
     fields into the BENCH_SF1.json rows. Gate:
     ``exponent_failures`` lists any non-density-bound tier member
     with max(fit, tail) > EXPONENT_GATE, plus ANY failed probe."""
-    import __spark_entry__ as entrymod
-
     spark = get_spark("etl-geotab-scale-exponent")
     spark.sparkContext.setLogLevel("ERROR")
     assert_replica_volume(spark)  # pins OUT = REPLICAS x SRC
-    qs = entrymod.queries()
 
     path = os.path.join(os.path.dirname(OUT), "BENCH_SF1.json")
     doc = json.load(open(path)) if os.path.exists(path) else {
@@ -599,7 +586,7 @@ def exponent() -> None:
         table = EXPONENT_PRIMARY[name]
         pts: list[tuple[float, float]] = []
         for d in (SRC_SMALL, SRC, OUT):
-            _cold, warm = _timed(spark, qs, name, d)
+            _cold, warm = _timed(spark, name, d)
             pts.append((float(vols[(d, table)]), warm))
         fields = fit_exponent(pts)
         fields["exponent_input"] = table
