@@ -115,25 +115,13 @@ def test_tainted_consumers_flags_retained_sharers_only():
 
 
 def test_shared_build_consumers_in_sync_with_registry():
-    """The map's build keys must EQUAL run_one's (bname, bfn) tuple
-    set — both directions, so adding a build to run_one without a
-    consumers entry fails here instead of silently never flagging its
-    consumers (review follow-up) — and every consumer must be a
-    registered query."""
-    import inspect
-    import re
-
+    """Every consumer of a shared build is a registered query (the
+    build list itself is the one table run_one iterates)."""
     import bench
     from etl_geotab_spark import queries as q
 
-    src = inspect.getsource(bench.run_one)
-    run_one_builds = set(re.findall(r'\("([a-z_]+)", _[a-z_]+\)', src))
-    assert run_one_builds == set(bench.SHARED_BUILD_CONSUMERS), (
-        run_one_builds,
-        set(bench.SHARED_BUILD_CONSUMERS),
-    )
     registered = set(q.queries())
-    for consumers in bench.SHARED_BUILD_CONSUMERS.values():
+    for _, consumers in bench.SHARED_BUILDS.values():
         for qn in consumers:
             assert qn in registered, qn
 
@@ -147,134 +135,6 @@ def test_aggregate_runs_empty_is_loud():
         aggregate_runs([], [])
 
 
-def test_boxcal_shape_and_determinism_of_keys():
-    """round-13: the box-speed scalar embedded in every bench record.
-    Timings themselves are box-dependent (no value assertions beyond
-    positivity); the contract is the shape — two fixed probes, finite
-    positive floats, JSON-serializable — and that the CLI wrapper
-    (tools/boxcal.py) exposes the same function."""
-    import json
-
-    from bench import boxcal
-
-    cal = boxcal()
-    assert set(cal) == {"py_sec", "np_sec", "bw_sec", "mp_sec"}
-    for k in ("py_sec", "np_sec", "bw_sec"):
-        assert isinstance(cal[k], float) and 0.0 < cal[k] < 120.0
-    # the all-cores probe may report -1.0 when the pool cannot start
-    assert cal["mp_sec"] == -1.0 or 0.0 < cal["mp_sec"] < 300.0
-    json.dumps(cal)  # must be a plain JSON scalar dict
-
-
-def test_boxcal_cli_prints_one_json_line():
-    import json
-    import subprocess
-    import sys
-    from pathlib import Path
-
-    repo = Path(__file__).resolve().parents[1]
-    out = subprocess.run(
-        [sys.executable, str(repo / "tools" / "boxcal.py")],
-        capture_output=True,
-        text=True,
-        timeout=300,
-    )
-    assert out.returncode == 0, out.stderr[-500:]
-    line = out.stdout.strip().splitlines()[-1]
-    cal = json.loads(line)
-    assert set(cal) == {"py_sec", "np_sec", "bw_sec", "mp_sec"}
-
-
-def test_boxcal_module_imports_without_pyspark():
-    """r13 ADVICE: the ad-hoc box-speed CLI must not pay (or depend
-    on) the multi-second pyspark/__spark_entry__ import — the probe
-    definitions live in tools/boxcal.py and that module must be
-    importable with pyspark absent from sys.modules afterwards."""
-    import subprocess
-    import sys
-    from pathlib import Path
-
-    repo = Path(__file__).resolve().parents[1]
-    out = subprocess.run(
-        [
-            sys.executable,
-            "-c",
-            "import sys; sys.path.insert(0, '.'); import tools.boxcal; "
-            "assert 'pyspark' not in sys.modules, 'pyspark leaked'; "
-            "assert 'bench' not in sys.modules, 'bench leaked'; "
-            "print('clean')",
-        ],
-        cwd=str(repo),
-        capture_output=True,
-        text=True,
-        timeout=120,
-    )
-    assert out.returncode == 0, out.stderr[-500:]
-    assert out.stdout.strip() == "clean"
-
-
-def test_sustain_probe_shape():
-    """r13 verdict item 3: the sustained all-cores probe rides in the
-    bench record, so its shape is a contract — four keys, finite
-    floats, ratio consistent with first5/last5 (or the -1.0 failure
-    sentinel quartet). Short wave count to keep the test cheap; the
-    semantics (warm wave discarded, per-wave timing) don't depend on
-    the count."""
-    import json
-
-    from tools.boxcal import sustain_probe
-
-    # waves < 2 -> the failure quartet, never a crash
-    assert all(v == -1.0 for v in sustain_probe(waves=1).values())
-
-    s = sustain_probe(waves=6)
-    assert set(s) == {
-        "sustain_first5_per_wave",
-        "sustain_last5_per_wave",
-        "sustain_ratio",
-        "sustain_waves",
-    }
-    json.dumps(s)
-    if s["sustain_waves"] == -1.0:  # pool failure path
-        assert all(v == -1.0 for v in s.values())
-    else:
-        assert s["sustain_waves"] == 6.0
-        assert 0.0 < s["sustain_first5_per_wave"] < 300.0
-        assert 0.0 < s["sustain_last5_per_wave"] < 300.0
-        expected = s["sustain_last5_per_wave"] / s["sustain_first5_per_wave"]
-        assert abs(s["sustain_ratio"] - expected) < 0.02
-
-
-def _fake_pool():
-    class FakePool:
-        terminated = joined = False
-
-        def terminate(self):
-            self.terminated = True
-
-        def join(self):
-            self.joined = True
-
-    return FakePool()
-
-
-def test_run_one_terminates_probe_pool_when_session_fails(monkeypatch):
-    import pytest
-
-    import bench
-
-    pool = _fake_pool()
-    monkeypatch.setattr(bench, "_probe_pool", lambda: pool)
-
-    def no_session(*a, **k):
-        raise RuntimeError("no session")
-
-    monkeypatch.setattr(bench, "get_spark", no_session)
-    with pytest.raises(RuntimeError, match="no session"):
-        bench.run_one("unused")
-    assert pool.terminated and pool.joined
-
-
 def test_run_one_stops_session_when_warmup_fails(monkeypatch):
     from types import SimpleNamespace
 
@@ -282,13 +142,11 @@ def test_run_one_stops_session_when_warmup_fails(monkeypatch):
 
     import bench
 
-    pool = _fake_pool()
     stopped = []
     spark = SimpleNamespace(
         sparkContext=SimpleNamespace(setLogLevel=lambda level: None),
         stop=lambda: stopped.append(True),
     )
-    monkeypatch.setattr(bench, "_probe_pool", lambda: pool)
     monkeypatch.setattr(bench, "get_spark", lambda *a, **k: spark)
 
     def broken_warm(spark, sf_dir):
@@ -298,4 +156,3 @@ def test_run_one_stops_session_when_warmup_fails(monkeypatch):
     with pytest.raises(RuntimeError, match="warm-up failed"):
         bench.run_one("unused")
     assert stopped == [True]
-    assert pool.terminated and pool.joined

@@ -726,13 +726,17 @@ def test_connector_pipeline_fetch_error_releases_checkpoints(geotab, monkeypatch
     """When one of the three concurrent fetches raises, the checkpoints
     the other two completed are released before the error propagates."""
     import etl_geotab_spark.sources.geotab as source
-    from etl_geotab_spark.blocks import persistent_rdd_count
+    from etl_geotab_spark.blocks import persistent_rdd_count, release_all_cached
     from etl_geotab_spark.pipeline.geotab import run_connector_pipeline
 
     def broken(df):
         raise RuntimeError("drivers adapter failed")
 
     monkeypatch.setattr(source, "drivers_relational", broken)
+    # blocks earlier tests left behind may be cleaned up by the JVM's
+    # ContextCleaner during the call, dropping the count below a
+    # baseline that included them
+    release_all_cached(geotab)
     before = persistent_rdd_count(geotab)
     with pytest.raises(RuntimeError, match="drivers adapter failed"):
         run_connector_pipeline(geotab, groups=("g1", "g2"))

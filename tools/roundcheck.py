@@ -9,14 +9,6 @@ checking logic, only the choreography):
   lint           tools/scale_lint.py — harness-contract lint.
   audit          tools/explain_audit.py — plan invariants (pushdown,
                  pruned ReadSchema, broadcast, no nested loops).
-  bench-diff     [--full only] tools/bench_diff.py vs the last
-                 round-close record — the §24-25 round-over-round
-                 bench adjudication (rc 1 on a CONSISTENT ≥2x
-                 regression). Sub-second and git-only, so it runs
-                 before the Spark suites in --full. Needs a fresh
-                 worktree BENCH_FULL.json (it flags an identical
-                 self-compare as vacuous); run it after the round's
-                 bench invocations.
   pytest         python -m pytest tests/ — the full unit/semantics
                  suite, including every paired query against its
                  DuckDB oracle at sf0.001 (tests/test_oracle.py).
@@ -70,11 +62,6 @@ GATES: dict[str, tuple[list[str], str, int]] = {
         "plan invariants",
         2400,
     ),
-    "bench-diff": (
-        [sys.executable, "tools/bench_diff.py"],
-        "round-over-round bench adjudication (no CONSISTENT >=2x)",
-        300,
-    ),
     "pytest": (
         [sys.executable, "-m", "pytest", "tests/", "-q"],
         "full unit/semantics suite",
@@ -86,14 +73,7 @@ GATES: dict[str, tuple[list[str], str, int]] = {
         3600,
     ),
 }
-# bench-diff needs a fresh worktree BENCH_FULL.json to say anything
-# (against the round base it compares that record, not the code), so
-# it rides --full / --only, not the fast set — run it after the
-# round's bench invocations, per the standing protocol. In --full it
-# sits right after lint: it is sub-second and depends only on the
-# committed record + git history, so a bench regression surfaces
-# before the ~20 min of Spark gates, not after.
-FAST = [g for g in GATES if g not in ("full-oracle", "bench-diff")]
+FAST = [g for g in GATES if g != "full-oracle"]
 
 
 def run_gate(name: str) -> tuple[bool, float, str, str]:
