@@ -9,8 +9,11 @@ ReadSchema. Nothing here materializes data on the driver.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -31,8 +34,51 @@ TABLES = (
 BROADCAST_SAFE = frozenset({"region", "nation", "supplier"})
 
 
+def file_identity(path: str) -> tuple | None:
+    """(path, inode, mtime_ns, size) of a table's file or directory, or
+    ``None`` when the path is not on the local filesystem. Memos over
+    table files key on this, so a table rewritten in place (a new file,
+    or a Spark overwrite that recreates the directory) is never answered
+    from a stale entry."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return (path, st.st_ino, st.st_mtime_ns, st.st_size)
+
+
+# The parquet confs that change an INFERRED schema; both are set by
+# load_table before it asks for one, so they are part of the memo key.
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+)
+# (file_identity, inference confs) -> inferred schema
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def table_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, memoized.
+
+    Inference reads a parquet footer in a Spark job on every read; a
+    long-lived session reads the same tables again and again, and at
+    100 TB the schema is a catalog fact. The key is the
+    files' identity plus the inference confs, so a rewritten table or a
+    conf change re-infers. A path off the local filesystem is inferred
+    every time."""
+    ident = file_identity(path)
+    if ident is None:
+        return spark.read.parquet(path).schema
+    key = (ident, tuple(spark.conf.get(c) for c in _INFERENCE_CONFS))
+    if key not in _SCHEMAS:
+        _SCHEMAS[key] = spark.read.parquet(path).schema
+    return _SCHEMAS[key]
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one fixture table. Lazy: no job runs until an action.
+    """Scan one fixture table. Lazy: no job runs until an action, and
+    after the first read of a table in the process none runs to infer
+    its schema either (``table_schema``).
 
     The fixtures store ``events.ts`` as parquet TIMESTAMP(MICROS) with
     ``isAdjustedToUTC=false`` at every scale. The ``nanosAsLong`` branch
@@ -49,11 +95,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-        return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    df = spark.read.schema(table_schema(spark, path)).parquet(path)
+    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+    return df
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from etl_geotab_spark.blocks import release_checkpoint
-from etl_geotab_spark.io import load_table, register_views
+from etl_geotab_spark.io import file_identity, load_table, register_views
 from etl_geotab_spark.functions.scalar import (
     callsign,
     js_coalesce,
@@ -127,30 +127,36 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
-# (sf_dir, table, arr_col) -> (row_count, min array length of arr_col)
-# memo for the corpus-scaled stride probes. Fixtures are immutable per
-# process lifetime, and without the memo every INVOCATION of a
-# stride-scaled query (semdedup, contrastive, ANN probes, contamination
-# bench set) paid a full extra count job at plan-construction time —
-# ~5 extra table scans per bench pass (round-7 review). arr_col is part
-# of the key so two callers probing DIFFERENT array columns of the same
-# table never see each other's cached dimension.
-_SIZE_PROBES: dict[tuple[str, str, str | None], tuple[int, int]] = {}
+# (file_identity, arr_col) -> (row_count, min array length of arr_col)
+# memo for the corpus-scaled stride probes. Without it every INVOCATION
+# of a stride-scaled query (semdedup, contrastive, ANN probes,
+# contamination bench set) paid a full extra count job at
+# plan-construction time — ~5 extra table scans per bench pass (round-7
+# review). The key is the table files' identity (the same one
+# ``io.table_schema`` keys on), so a table rewritten in place is
+# re-probed; arr_col is part of it so two callers probing DIFFERENT
+# array columns of the same table never see each other's dimension.
+_SIZE_PROBES: dict[tuple, tuple[int, int]] = {}
 
 
 def _size_probe(
     spark: SparkSession, sf_dir: str, table: str, arr_col: str | None = None
 ) -> tuple[int, int]:
     """Memoized (row_count, min size(arr_col) or 0) for a fixture
-    table — one bounded scalar job per distinct probe per process."""
-    key = (sf_dir, table, arr_col)
-    if key not in _SIZE_PROBES:
+    table — one bounded scalar job per distinct probe per table version
+    (a table off the local filesystem is probed every call)."""
+    ident = file_identity(f"{sf_dir}/{table}.parquet")
+    key = (ident, arr_col)
+    if ident is None or key not in _SIZE_PROBES:
         df = _t(spark, sf_dir, table)
         aggs = [F.count(F.lit(1)).alias("n")]
         if arr_col is not None:
             aggs.append(F.min(F.size(arr_col)).alias("d"))
         row = df.agg(*aggs).collect()[0]  # bounded: one scalar row
-        _SIZE_PROBES[key] = (row["n"], (row["d"] if arr_col else 0) or 0)
+        probe = (row["n"], (row["d"] if arr_col else 0) or 0)
+        if ident is None:
+            return probe
+        _SIZE_PROBES[key] = probe
     return _SIZE_PROBES[key]
 
 

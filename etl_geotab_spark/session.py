@@ -3,15 +3,20 @@
 The reference runs one Node process with the whole fleet in RAM
 (task.ts:124-295); our engine is lazy/distributed, so session defaults
 matter. Choices here are the 100 TB-scale defaults scaled down to
-local[32]:
+``local[N]``, N = ``SPARK_GRAFT_CPUS`` (default 32):
 
 - ``spark.sql.session.timeZone=UTC``: the reference parses ISO-8601
   ``Z`` strings (task.ts:265); UTC session tz makes ``to_timestamp``
   byte-faithful (SURVEY.md §4 trap 3).
 - AQE on (runtime re-plan, skew-join splitting, auto-broadcast).
 - Arrow on (pandas UDF / toPandas fast path).
-- ``spark.sql.shuffle.partitions=32``: matches local core count; on a
-  real cluster this is overridden (AQE coalesces anyway).
+- ``spark.sql.shuffle.partitions=N``: matches the local core count; on
+  a real cluster this is overridden (AQE coalesces anyway).
+- ``spark.sql.codegen.cache.maxEntries=4096``: a long-lived session
+  compiles each plan shape's generated classes once. One whole-registry
+  pass at sf0.01 generates ~2,500 distinct classes; at Spark's default
+  of 100 entries the LRU thrashes and a second pass recompiled 3,286
+  (76 at 4096).
 """
 
 from __future__ import annotations
@@ -69,6 +74,13 @@ def get_spark(
         # -XX:+UseCodeCacheFlushing tuning or splitting the bench
         # into multiple sessions — not a bigger cache.
         .config("spark.driver.extraJavaOptions", "-XX:ReservedCodeCacheSize=2g")
+        # Generated-class cache (static; read when codegen first runs).
+        # Spark's 100-entry LRU thrashes on a workload that cycles
+        # through more plan shapes than that: the five-query
+        # llm_curation pass cycles ~151 classes and recompiled ~110 of
+        # them on every pass. 4096 holds a whole-registry pass (~2,500
+        # classes at sf0.01) for +19 MB Metaspace and +19 MB CodeHeap.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )
@@ -79,7 +91,14 @@ def get_spark(
 
 def tune_for_session(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable engine defaults to an externally-created
-    session (the driver harness passes us its own SparkSession)."""
+    session (the driver harness passes us its own SparkSession).
+
+    Static confs cannot be applied to a session this module did not
+    build, so such a session runs with its own generated-class cache
+    size (``spark.sql.codegen.cache.maxEntries``), JIT code cache
+    (``-XX:ReservedCodeCacheSize``) and driver memory
+    (``spark.driver.memory``). All three are perf-only: results do not
+    depend on them (SCALE.md §21)."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     for conf, val in (
         ("spark.sql.adaptive.enabled", "true"),

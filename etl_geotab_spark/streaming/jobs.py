@@ -59,17 +59,18 @@ def stream_events(
 ) -> DataFrame:
     """Streaming scan of the ``events`` fixture (file source).
 
-    Schema comes from a batch peek (file sources need an explicit
-    schema — streaming can't infer). ``ts`` is TIMESTAMP(MICROS) in the
-    fixtures; a TIMESTAMP(NANOS) file would be read as raw long ns and
-    converted to µs TimestampType, same as the batch path in
-    ``io.load_table`` so batch/stream results agree.
+    Schema comes from ``io.table_schema``, the memo the batch read
+    just filled (file sources need an explicit schema — streaming can't
+    infer). ``ts`` is TIMESTAMP(MICROS) in the fixtures; a
+    TIMESTAMP(NANOS) file would be read as raw long ns and converted to
+    µs TimestampType, same as the batch path in ``io.load_table`` so
+    batch/stream results agree.
     """
-    from etl_geotab_spark.io import load_table
+    from etl_geotab_spark.io import load_table, table_schema
 
     batch = load_table(spark, sf_dir, "events")  # sets nanosAsLong conf
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    src = f"{sf_dir}/events.parquet"
+    raw_schema = table_schema(spark, src)
     # The file source watches a DIRECTORY of arriving files (the real
     # deployment shape: a landing zone fed by upstream writers), so
     # the fixture is exposed through a per-sf link dir. The fixture
@@ -84,7 +85,6 @@ def stream_events(
         tempfile.gettempdir(), "etl_geotab_stream", sf_dir.strip("/").replace("/", "_")
     )
     os.makedirs(link_dir, exist_ok=True)
-    src = f"{sf_dir}/events.parquet"
     for existing in os.listdir(link_dir):
         p = os.path.join(link_dir, existing)
         if os.path.islink(p) and (
