@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
 from etl_geotab_spark.functions.text import tokenize, word_shingles
+from etl_geotab_spark.session import per_jvm
 
 
 def dedup_latest(
@@ -39,14 +40,21 @@ def dedup_latest(
     = one hash aggregate. Cheaper at scale than the window-function
     formulation (no per-partition sort, partial aggregation map-side).
     """
-    order_struct = F.struct(
-        *[F.col(c) for c in [order_col, *(tiebreak_cols or [])]]
+    agg_col, unpack = _latest_row_columns(
+        tuple(df.columns), order_col, tuple(tiebreak_cols or ())
     )
-    out_cols = [c for c in df.columns]
-    agg = df.groupBy(*key_cols).agg(
-        F.max_by(F.struct(*[F.col(c) for c in out_cols]), order_struct).alias("_row")
-    )
-    return agg.select(*[F.col(f"_row.{c}").alias(c) for c in out_cols])
+    return df.groupBy(*key_cols).agg(agg_col).select(*unpack)
+
+
+@per_jvm
+def _latest_row_columns(
+    columns: tuple[str, ...], order_col: str, tiebreaks: tuple[str, ...]
+) -> tuple[Column, tuple[Column, ...]]:
+    """``dedup_latest``'s ``max_by`` aggregate and the projection that
+    unpacks its struct, built once per JVM for each row shape."""
+    order_struct = F.struct(*[F.col(c) for c in [order_col, *tiebreaks]])
+    row = F.max_by(F.struct(*[F.col(c) for c in columns]), order_struct)
+    return row.alias("_row"), tuple(F.col(f"_row.{c}").alias(c) for c in columns)
 
 
 def dedup_exact(df: DataFrame, content_col: str, id_col: str) -> DataFrame:

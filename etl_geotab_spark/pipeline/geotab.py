@@ -33,6 +33,7 @@ from etl_geotab_spark.functions.scalar import (
     surrogate_key,
 )
 from etl_geotab_spark.operators.dedup import dedup_latest
+from etl_geotab_spark.session import per_jvm
 
 
 def geotab_pipeline(
@@ -75,7 +76,26 @@ def geotab_pipeline(
 
     # J2 left join to drivers via nullable driver_id (task.ts:248-258);
     # NULL key yields no match = reference's string-sentinel skip (J3).
-    d = drivers.select(
+    d = drivers.select(*_driver_columns())
+    joined = joined.join(
+        broadcast(d), on=joined.driver_id == d._drv_id, how="left"
+    )
+
+    out = joined.select(*_feature_columns())
+
+    # P10 prefix filter — on the POST-default name (task.ts:288-291);
+    # startswith('') is true, matching JS.
+    return out.where(F.col("name").startswith(F.lit(prefix)))
+
+
+# The constant projections of the tick, built once per JVM: only ``now``,
+# the freshness horizon, the prefix and the two join conditions change
+# from one tick to the next (SCALE.md §7).
+
+
+@per_jvm
+def _driver_columns() -> tuple[Column, ...]:
+    return (
         F.col("id").alias("_drv_id"),
         F.col("name").alias("driver_username"),
         F.col("first_name").alias("driver_first_name"),
@@ -84,11 +104,11 @@ def geotab_pipeline(
         F.col("designation").alias("driver_designation"),
         F.col("comment").alias("driver_comment"),
     )
-    joined = joined.join(
-        broadcast(d), on=joined.driver_id == d._drv_id, how="left"
-    )
 
-    out = joined.select(
+
+@per_jvm
+def _feature_columns() -> tuple[Column, ...]:
+    return (
         # P6 surrogate key (task.ts:270)
         surrogate_key("geotab-", "device_id").alias("id"),
         # P4 callsign: raw (pre-default) name/state/plate (task.ts:261-263)
@@ -113,9 +133,30 @@ def geotab_pipeline(
         F.col("driver_comment"),
     )
 
-    # P10 prefix filter — on the POST-default name (task.ts:288-291);
-    # startswith('') is true, matching JS.
-    return out.where(F.col("name").startswith(F.lit(prefix)))
+
+def read_geotab(
+    source,
+    entity: str,
+    groups: tuple[str, ...],
+    transport: str,
+    session_id: str,
+    **opts: str,
+) -> DataFrame:
+    """One Geotab entity scan, batch or streaming: ``source`` is
+    ``spark.read`` or ``spark.readStream``; ``opts`` are further reader
+    options. The wire schemas are fixed constants (task.ts:12-55), and
+    passing them explicitly skips a Python-planner round trip per load
+    (the DataSource.schema() call spawns a worker; ~0.6 s each)."""
+    from etl_geotab_spark.sources.geotab import _SCHEMAS
+
+    options = {
+        "typename": entity,
+        "transport": transport,
+        "sessionid": session_id,
+        "groups": ",".join(groups),
+        **opts,
+    }
+    return source.format("geotab").schema(_SCHEMAS[entity]).options(**options).load()
 
 
 def run_connector_pipeline(
@@ -167,7 +208,6 @@ def run_connector_pipeline(
     before being returned — observability without changing the result.
     """
     from etl_geotab_spark.sources.geotab import (
-        _SCHEMAS,
         device_status_relational,
         devices_relational,
         drivers_relational,
@@ -178,21 +218,15 @@ def run_connector_pipeline(
     max_partitions = max(1, spark.sparkContext.defaultParallelism // 3)
 
     def read(entity: str, **opts):
-        # Wire schemas are fixed constants (task.ts:12-55) — passing
-        # them explicitly skips a Python-planner round-trip per load
-        # (the DataSource.schema() call spawns a worker; ~0.6 s each).
-        r = (
-            spark.read.format("geotab")
-            .schema(_SCHEMAS[entity])
-            .option("typename", entity)
-            .option("transport", transport)
-            .option("sessionid", session_id)
-            .option("groups", ",".join(groups))
-            .option("maxpartitions", str(max_partitions))
+        return read_geotab(
+            spark.read,
+            entity,
+            groups,
+            transport,
+            session_id,
+            maxpartitions=str(max_partitions),
+            **opts,
         )
-        for k, v in opts.items():
-            r = r.option(k, v)
-        return r.load()
 
     fetches = [
         ("DeviceStatusInfo", device_status_relational, {}),
@@ -232,6 +266,11 @@ def to_geojson_features(features: DataFrame) -> DataFrame:
     """S7 sink shape: one JSON string per feature, matching the
     reference's Feature envelope (task.ts:269-285). Use
     ``collect_features_json`` for the FeatureCollection document."""
+    return features.select(*_feature_json_columns())
+
+
+@per_jvm
+def _feature_json_columns() -> tuple[Column, ...]:
     props = F.struct(
         F.col("callsign"),
         F.col("course"),
@@ -257,8 +296,9 @@ def to_geojson_features(features: DataFrame) -> DataFrame:
         props.alias("properties"),
         F.col("geometry"),
     )
-    return features.select(
-        F.col("id"), F.to_json(feature, {"ignoreNullFields": "false"}).alias("feature_json")
+    return (
+        F.col("id"),
+        F.to_json(feature, {"ignoreNullFields": "false"}).alias("feature_json"),
     )
 
 

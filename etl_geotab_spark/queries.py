@@ -26,6 +26,7 @@ import os
 
 from collections.abc import Callable
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
@@ -61,6 +62,7 @@ from etl_geotab_spark.operators.dedup import (
 from etl_geotab_spark.operators.asof import asof_join
 from etl_geotab_spark.operators.similarity import cosine_topk_bruteforce
 from etl_geotab_spark.operators.topk import top_k_global, top_k_per_group
+from etl_geotab_spark.session import per_jvm
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -1650,18 +1652,31 @@ def q_geotab_connector_pipeline(spark: SparkSession, sf: str) -> DataFrame:
         now=F.lit("2024-01-01T22:00:00Z").cast("timestamp"),
         freshness="24 HOURS",
     )
-    # Harness boundary: the driver canonicalizer can't hash array cells
-    # (VERDICT r1) — serialize `groups` and the GeoJSON struct (its
-    # coordinates field is an array); the library API keeps both typed.
-    # Geometry uses %.3f (not to_json) so the float rendering is
-    # engine-pinned: Java's Double.toString and DuckDB/Python shortest-
-    # repr disagree on some doubles, printf-style formatting never does.
-    return feats.withColumn("groups", F.to_json("groups")).withColumn(
-        "geometry",
-        F.format_string(
-            '{"type":"Point","coordinates":[%.3f,%.3f]}',
-            F.col("geometry.coordinates")[0],
-            F.col("geometry.coordinates")[1],
+    return _flat_features(feats)
+
+
+def _flat_features(feats: DataFrame) -> DataFrame:
+    """Result boundary of the connector family: the canonicalizer that
+    compares query results can't hash array cells (VERDICT r1), so
+    serialize `groups` and the GeoJSON struct (its coordinates field is
+    an array); the library API keeps both typed. Geometry uses %.3f (not to_json)
+    so the float rendering is engine-pinned: Java's Double.toString and
+    DuckDB/Python shortest-repr disagree on some doubles, printf-style
+    formatting never does."""
+    return feats.withColumns(dict(_flat_feature_columns()))
+
+
+@per_jvm
+def _flat_feature_columns() -> tuple:
+    return (
+        ("groups", F.to_json("groups")),
+        (
+            "geometry",
+            F.format_string(
+                '{"type":"Point","coordinates":[%.3f,%.3f]}',
+                F.col("geometry.coordinates")[0],
+                F.col("geometry.coordinates")[1],
+            ),
         ),
     )
 
@@ -4738,13 +4753,14 @@ def q_udaf_weighted_median(spark: SparkSession, sf: str) -> DataFrame:
     bounded groups like return flags; for unbounded groups use the
     two-pass expression form (cumulative-weight window + first
     crossing, exactly what the oracle SQL does distributedly)."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-    # explicit functionType (not type hints): this module uses
-    # `from __future__ import annotations`, which stringifies the
-    # hints pandas_udf would otherwise introspect
-    @pandas_udf("double", PandasUDFType.GROUPED_AGG)
-    def wmedian(v, w):
+    # Series, Series -> scalar hints make this a grouped aggregate. This
+    # module uses `from __future__ import annotations`, so the hints are
+    # strings; pandas_udf resolves them against the module globals,
+    # where `pd` is imported.
+    @pandas_udf("double")
+    def wmedian(v: pd.Series, w: pd.Series) -> float:
         import numpy as np
 
         order = np.argsort(v.to_numpy(), kind="stable")
@@ -8396,9 +8412,8 @@ def q_geotab_stream_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     semantics, task.ts:124-295 dataflow)."""
     import tempfile
 
-    from etl_geotab_spark.pipeline.geotab import geotab_pipeline
+    from etl_geotab_spark.pipeline.geotab import geotab_pipeline, read_geotab
     from etl_geotab_spark.sources.geotab import (
-        _SCHEMAS,
         device_status_relational,
         devices_relational,
         drivers_relational,
@@ -8407,33 +8422,13 @@ def q_geotab_stream_pipeline(spark: SparkSession, sf: str) -> DataFrame:
 
     register_geotab_source(spark)
     now = F.lit("2024-01-01T22:00:00Z").cast("timestamp")
-    groups = "g1,g2,g3,g4"
+    fleet = (("g1", "g2", "g3", "g4"), "fake", "session-stream-bench")
 
-    def read_dim(entity: str, **opts):
-        r = (
-            spark.read.format("geotab")
-            .schema(_SCHEMAS[entity])
-            .option("typename", entity)
-            .option("transport", "fake")
-            .option("sessionid", "session-stream-bench")
-            .option("groups", groups)
-        )
-        for k, v in opts.items():
-            r = r.option(k, v)
-        return r.load()
-
-    devices = devices_relational(read_dim("Device", excludeuntrackedassets="true"))
-    drivers = drivers_relational(read_dim("User"))
-
-    stream = (
-        spark.readStream.format("geotab")
-        .schema(_SCHEMAS["DeviceStatusInfo"])
-        .option("typename", "DeviceStatusInfo")
-        .option("transport", "fake")
-        .option("sessionid", "session-stream-bench")
-        .option("groups", groups)
-        .load()
+    devices = devices_relational(
+        read_geotab(spark.read, "Device", *fleet, excludeuntrackedassets="true")
     )
+    drivers = drivers_relational(read_geotab(spark.read, "User", *fleet))
+    stream = read_geotab(spark.readStream, "DeviceStatusInfo", *fleet)
 
     collected: list = []
     schema_holder: list = []
@@ -8446,15 +8441,7 @@ def q_geotab_stream_pipeline(spark: SparkSession, sf: str) -> DataFrame:
             now=now,
             freshness="24 HOURS",
         )
-        # same harness-boundary serialization as the batch twin
-        out = feats.withColumn("groups", F.to_json("groups")).withColumn(
-            "geometry",
-            F.format_string(
-                '{"type":"Point","coordinates":[%.3f,%.3f]}',
-                F.col("geometry.coordinates")[0],
-                F.col("geometry.coordinates")[1],
-            ),
-        )
+        out = _flat_features(feats)  # the batch twin's serialization
         if not schema_holder:
             schema_holder.append(out.schema)
         collected.extend(out.collect())

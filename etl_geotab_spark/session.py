@@ -21,8 +21,11 @@ matter. Choices here are the 100 TB-scale defaults scaled down to
 
 from __future__ import annotations
 
+import functools
 import os
+import threading
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 
@@ -110,3 +113,35 @@ def tune_for_session(spark: SparkSession) -> SparkSession:
         except Exception:
             pass  # static conf on some builds; AQE default-on in Spark 4
     return spark
+
+
+def per_jvm(build):
+    """Memoize a function that builds constant Columns, for the life of
+    the JVM.
+
+    Every Column function call pays PySpark's call-site capture: a stack
+    walk plus about six py4j round trips (SCALE.md §7). A plan rebuilt on
+    every tick spends more time building its constant expressions than
+    Spark spends running it. A Column is a JVM expression tree, bound to
+    no session or frame, so one built once can go into every later plan.
+
+    ``build`` takes hashable arguments and returns an immutable value (a
+    Column, or a tuple holding Columns) shared by every caller. The memo
+    is keyed on the py4j gateway: a session stopped and rebuilt on the
+    same JVM keeps it, and a relaunched JVM starts it afresh."""
+    memo: dict = {}
+    gateway = None
+    lock = threading.Lock()  # the connector's scans build concurrently
+
+    @functools.wraps(build)
+    def cached(*args):
+        nonlocal gateway
+        with lock:
+            if gateway is not SparkContext._gateway:
+                memo.clear()
+                gateway = SparkContext._gateway
+            if args not in memo:
+                memo[args] = build(*args)
+            return memo[args]
+
+    return cached

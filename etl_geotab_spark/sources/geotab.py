@@ -63,6 +63,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from etl_geotab_spark.session import per_jvm
+
 # ------------------------------------------------------------ wire schemas
 # Mirrors of the TypeBox wire schemas (projection-at-schema-level: fields
 # not declared here are dropped on parse — task.ts:38 "only grabs
@@ -848,13 +850,16 @@ def register_geotab_source(spark) -> None:
 # ----------------------------------------- wire → relational adapters
 # Flatten the wire structs into the snake_case relational schemas the
 # pipeline operates on (pipeline/geotab.py), completing the end-to-end
-# path: connector scan → adapter → geotab_pipeline → REST sink.
+# path: connector scan → adapter → geotab_pipeline → REST sink. Each
+# adapter's projection is built once per JVM (``per_jvm``): every tick
+# runs all three.
 
 
-def device_status_relational(df):
+@per_jvm
+def _device_status_columns():
     from pyspark.sql import functions as F
 
-    return df.select(
+    return (
         F.col("device.id").alias("device_id"),
         F.to_timestamp("dateTime").alias("date_time"),
         F.col("driver.id").alias("driver_id"),
@@ -868,10 +873,11 @@ def device_status_relational(df):
     )
 
 
-def devices_relational(df):
+@per_jvm
+def _devices_columns():
     from pyspark.sql import functions as F
 
-    return df.select(
+    return (
         "id",
         "name",
         F.col("vehicleIdentificationNumber").alias(
@@ -882,10 +888,11 @@ def devices_relational(df):
     )
 
 
-def drivers_relational(df):
+@per_jvm
+def _drivers_columns():
     from pyspark.sql import functions as F
 
-    return df.select(
+    return (
         "id",
         "name",
         F.col("firstName").alias("first_name"),
@@ -894,6 +901,18 @@ def drivers_relational(df):
         "designation",
         "comment",
     )
+
+
+def device_status_relational(df):
+    return df.select(*_device_status_columns())
+
+
+def devices_relational(df):
+    return df.select(*_devices_columns())
+
+
+def drivers_relational(df):
+    return df.select(*_drivers_columns())
 
 
 # ----------------------------------------------- connector-pipeline oracle

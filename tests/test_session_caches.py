@@ -68,3 +68,64 @@ def test_table_rewritten_in_place_is_reinferred(spark, tmp_path):
     assert df.columns == ["b", "c"]
     assert df.count() == 7
     assert Q._size_probe(spark, sf, "orders")[0] == 7
+
+
+def test_per_jvm_memo_is_keyed_on_the_gateway(monkeypatch):
+    """``per_jvm`` answers from its memo while the py4j gateway is the
+    same and builds afresh once a new JVM (a new gateway) is up: a
+    Column of a dead JVM must not reach a plan."""
+    from pyspark import SparkContext
+
+    from etl_geotab_spark.session import per_jvm
+
+    @per_jvm
+    def build(tag):
+        return object()
+
+    monkeypatch.setattr(SparkContext, "_gateway", object())
+    first = build("a")
+    assert build("a") is first
+    assert build("b") is not first
+    monkeypatch.setattr(SparkContext, "_gateway", object())
+    assert build("a") is not first
+
+
+def test_per_jvm_builds_once_under_concurrent_callers(monkeypatch):
+    """Concurrent first callers (the connector's three scans build their
+    projections on three threads) share one build."""
+    import sys
+    import threading
+    import time
+
+    from pyspark import SparkContext
+
+    from etl_geotab_spark.session import per_jvm
+
+    builds = []
+
+    @per_jvm
+    def build():
+        builds.append(None)
+        time.sleep(0.01)  # a real build waits on py4j round trips
+        return object()
+
+    monkeypatch.setattr(SparkContext, "_gateway", object())
+    start = threading.Barrier(16)
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        got = []
+
+        def call():
+            start.wait(timeout=30)
+            got.append(build())
+
+        threads = [threading.Thread(target=call) for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert len(builds) == 1 and len(got) == 16 and len({id(g) for g in got}) == 1
