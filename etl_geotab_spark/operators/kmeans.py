@@ -7,16 +7,13 @@ bucketing, and training-data curation (cluster-balanced sampling).
 
 Scale design (100 TB): the N×dim point set stays distributed end to
 end; only the k×dim centroid table ever touches the driver (k ≤ a few
-thousand → KBs-MBs). Each iteration is
-
-    assign+update (fused): ONE Arrow-batched mapInPandas pass per
-             iteration — numpy computes exact squared distances and
-             argmin per batch (BLAS-speed, vs k×dim interpreted
-             lambda calls per row in the expression form, kept below
-             as assign_clusters for tests/small data), then emits
-             k×dim partial (sum, count) rows per batch: the map-side
-             combine. One tiny groupBy(cluster, pos) merges partials,
-             so shuffle volume is k×dim×batches regardless of N.
+thousand → KBs-MBs). Each iteration is one ``kernels.lloyd_round``
+under the euclidean metric: one Arrow-batched pass assigns every row
+(exact squared distances, numpy argmin per batch) and sums each
+partition's rows into per-centroid (sum, count) partials — the
+map-side combine — and one tiny ``groupBy`` merges them, so shuffle
+volume is k×(dim+1)×partitions regardless of N. The final assignment
+is ``kernels.nearest``.
 
 That is the canonical distributed k-means cost: O(iters) jobs, each one
 scan + one tiny shuffle. Deterministic: seeds are the k lowest-id
@@ -25,12 +22,11 @@ vectors, ties in argmin break toward the lower centroid id.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from etl_geotab_spark.operators.kernels import lloyd_round, nearest
 
 
 def _sq_dist(vec_col: Column, centroid: list[float]) -> Column:
@@ -44,89 +40,6 @@ def _sq_dist(vec_col: Column, centroid: list[float]) -> Column:
     )
 
 
-def assign_clusters_arrow(
-    df: DataFrame, vec_col: str, centroids: list[list[float]]
-) -> DataFrame:
-    """Vectorized assign: one Arrow batch → one numpy (N×dim)·(dim×k)
-    matmul-free exact distance argmin. Same tie rule as the expression
-    form (np.argmin keeps the FIRST minimum → lowest cluster id). The
-    100 TB hot path: per-row cost is a BLAS-friendly vector op instead
-    of k×dim interpreted lambda calls."""
-    from pyspark.sql.functions import pandas_udf
-
-    cents = np.asarray(centroids, dtype=np.float64)
-
-    @pandas_udf("int")
-    def _assign(vecs: pd.Series) -> pd.Series:
-        x = np.asarray(list(vecs), dtype=np.float64)
-        if x.size == 0:
-            return pd.Series([], dtype="int32")
-        # exact per-pair (x-c)^2 sums (not the |x|²-2xc+|c|² expansion,
-        # which loses precision exactly where ties matter)
-        d2 = ((x[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-        return pd.Series(np.argmin(d2, axis=1).astype("int32"))
-
-    return df.withColumn("cluster", _assign(F.col(vec_col)))
-
-
-def _partial_sums_schema() -> str:
-    return "cluster int, pos int, s double, n long"
-
-
-def _cluster_partial_sums(
-    vec_col: str, centroids: list[list[float]]
-):
-    """mapInPandas kernel: per batch, assign via numpy argmin and emit
-    k×dim partial rows (cluster, pos, sum, count) — the map-side
-    combine for the update step, so shuffle volume is k×dim per batch
-    regardless of N."""
-    cents = np.asarray(centroids, dtype=np.float64)
-    k, dim = cents.shape
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.asarray(list(pdf[vec_col]), dtype=np.float64)
-            d2 = ((x[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-            a = np.argmin(d2, axis=1)
-            out = []
-            for c in np.unique(a):
-                xs = x[a == c]
-                s = xs.sum(axis=0)
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "cluster": np.full(dim, c, dtype=np.int32),
-                            "pos": np.arange(dim, dtype=np.int32),
-                            "s": s,
-                            "n": np.full(dim, xs.shape[0], dtype=np.int64),
-                        }
-                    )
-                )
-            yield pd.concat(out, ignore_index=True)
-
-    return gen
-
-
-def assign_clusters(
-    df: DataFrame, vec_col: str, centroids: list[list[float]]
-) -> DataFrame:
-    """Add a ``cluster`` column = argmin over squared distances to the
-    given centroids. Ties break to the lowest cluster id (array_min on
-    (dist, cid) structs orders lexicographically)."""
-    pairs = F.array(
-        *[
-            F.struct(
-                _sq_dist(F.col(vec_col), c).alias("d"),
-                F.lit(i).alias("cid"),
-            )
-            for i, c in enumerate(centroids)
-        ]
-    )
-    return df.withColumn("cluster", F.array_min(pairs)["cid"])
-
-
 def lloyd_kmeans(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -134,7 +47,8 @@ def lloyd_kmeans(
     k: int = 8,
     iters: int = 5,
 ) -> tuple[DataFrame, list[list[float]]]:
-    """Run `iters` Lloyd iterations; returns (assigned_df, centroids).
+    """Run `iters` Lloyd iterations; returns (assigned_df, centroids),
+    the frame with an ``int`` ``cluster`` column.
 
     Seeding: the k rows with the lowest `id_col` (deterministic across
     engines/partitionings; k-means++ would add per-seed passes — at
@@ -146,31 +60,13 @@ def lloyd_kmeans(
         .limit(k)
         .collect()
     )
-    centroids = [list(r[vec_col]) for r in seeds]
+    centroids = np.array([r[vec_col] for r in seeds], dtype=np.float64)
 
-    points = df.select(id_col, vec_col)
     for _ in range(iters):
-        # fused assign+update: one Arrow pass emits k×dim partial
-        # (sum, count) rows per batch (numpy argmin + per-cluster sums
-        # — see _cluster_partial_sums), one tiny groupBy merges them,
-        # k×dim rows reach the driver.
-        sums = (
-            points.mapInPandas(
-                _cluster_partial_sums(vec_col, centroids),
-                schema=_partial_sums_schema(),
-            )
-            .groupBy("cluster", "pos")
-            .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-            .collect()
-        )
-        new_c = {}
-        for row in sums:
-            new_c.setdefault(row["cluster"], {})[row["pos"]] = (
-                row["s"] / row["n"]
-            )
-        centroids = [
-            [new_c[i][p] for p in sorted(new_c[i])] if i in new_c else c
-            for i, c in enumerate(centroids)
-        ]
+        centroids = lloyd_round(df, vec_col, centroids, "euclidean")
 
-    return assign_clusters_arrow(df, vec_col, centroids), centroids
+    assigned = nearest(df, vec_col, centroids, "euclidean", 1, "cluster")
+    return (
+        assigned.withColumn("cluster", F.col("cluster").cast("int")),
+        centroids.tolist(),
+    )

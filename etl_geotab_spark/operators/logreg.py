@@ -2,8 +2,9 @@
 descent) — the minimal "ML training loop on Spark" pattern, same
 execution shape as operators/kmeans.py:
 
-- the MODEL (w, 65 doubles) broadcasts into an Arrow-batched
-  ``mapInPandas`` closure each round;
+- the MODEL (w, 65 doubles) is a default argument of the per-batch
+  gradient function, so it ships in the closure of each round's
+  ``kernels.batch_sum``;
 - each partition emits only its PARTIAL gradient (dim+1 numbers), so
   the per-round shuffle is (partitions × dim) rows — never data-sized;
 - the driver reduces dim+1 numbers and updates w.
@@ -17,13 +18,13 @@ which bounds, not breaks, the comparison.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from etl_geotab_spark.operators.kernels import batch_sum, vectors
 
 WEIGHTS_SCHEMA = "feature_idx INT, weight DOUBLE"
 
@@ -54,35 +55,13 @@ def train_logreg(
 
     w = np.zeros(dim + 1, dtype=np.float64)
     for _ in range(iterations):
-        w_b = w.copy()  # captured by value in the closure
 
-        def partial_grad(
-            batches: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
-            acc = np.zeros(dim + 1, dtype=np.float64)
-            for b in batches:
-                if not len(b):
-                    continue
-                X = np.vstack(b["x"].to_numpy()).astype(np.float64)
-                y = b["y"].to_numpy(dtype=np.float64)
-                z = X @ w_b[:dim] + w_b[dim]
-                r = _sigmoid(z) - y
-                acc[:dim] += X.T @ r
-                acc[dim] += float(r.sum())
-            yield pd.DataFrame(
-                {"idx": np.arange(dim + 1, dtype=np.int32), "g": acc}
-            )
+        def grad(b: pd.DataFrame, w: np.ndarray = w.copy()) -> np.ndarray:
+            X = vectors(b["x"])
+            r = _sigmoid(X @ w[:dim] + w[dim]) - b["y"].to_numpy(dtype=np.float64)
+            return np.append(X.T @ r, r.sum())
 
-        grad_rows = (
-            data.mapInPandas(partial_grad, "idx INT, g DOUBLE")
-            .groupBy("idx")
-            .agg(F.sum("g").alias("g"))
-            .collect()  # bounded: dim+1 rows, never data-sized
-        )
-        grad = np.zeros(dim + 1, dtype=np.float64)
-        for r in grad_rows:
-            grad[r.idx] = r.g
-        w -= lr * grad / n_total
+        w -= lr * batch_sum(data, dim + 1, grad) / n_total
 
     return spark.createDataFrame(
         [(int(i), float(w[i])) for i in range(dim + 1)], WEIGHTS_SCHEMA

@@ -7,11 +7,12 @@ training corpus.
 
 Scale design (100 TB): the classic two-pass Gramian method —
 
-    pass 1: ONE Arrow-batched mapInPandas scan emits per-batch partial
-            sums of n, Σx (dim rows) and ΣxxT (dim² rows) keyed by
-            flat index; a tiny groupBy merges them. Shuffle volume is
-            dim²×batches and the driver collects exactly dim²+dim+1
-            rows — bounded by DIMENSION, never by N.
+    pass 1: ONE ``kernels.batch_sum`` scan: each partition sums n,
+            Σx (dim entries) and ΣxxT (dim² entries) over its Arrow
+            batches and emits one flat-indexed block; a tiny groupBy
+            merges them. Shuffle volume is dim²×partitions and the
+            driver collects at most dim²+dim+1 rows — bounded by
+            DIMENSION, never by N. NULL vectors are filtered first.
     driver: eigendecomposition of the dim×dim covariance (64×64 here —
             microseconds; even 4096-dim is a <1 s driver op).
     pass 2: projection is a vectorized pandas UDF matmul per batch
@@ -27,34 +28,12 @@ queries()/tests layer treats PCA as rows-only + quality-gated).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _gram_partials(vec_col: str):
-    """mapInPandas kernel: per batch emit flat-indexed partial sums —
-    idx 0 = count, idx 1..dim = Σx, idx dim+1.. = row-major ΣxxT.
-    (Everything is derived from the batch shape; NULL vectors are
-    filtered upstream in fit_pca.)"""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.asarray(list(pdf[vec_col]), dtype=np.float64)
-            gram = x.T @ x  # (dim × dim) BLAS
-            vals = np.concatenate(
-                ([float(x.shape[0])], x.sum(axis=0), gram.ravel())
-            )
-            yield pd.DataFrame(
-                {"idx": np.arange(vals.size, dtype=np.int64), "s": vals}
-            )
-
-    return gen
+from etl_geotab_spark.operators.kernels import batch_sum, vectors
 
 
 def fit_pca(
@@ -65,16 +44,13 @@ def fit_pca(
     eigh of a dim×dim matrix."""
     vecs = df.select(vec_col).where(F.col(vec_col).isNotNull())
     dim = len(vecs.first()[0])
-    rows = (
-        vecs
-        .mapInPandas(_gram_partials(vec_col), schema="idx long, s double")
-        .groupBy("idx")
-        .agg(F.sum("s").alias("s"))
-        .collect()
-    )
-    flat = np.zeros(1 + dim + dim * dim)
-    for r in rows:
-        flat[r["idx"]] = r["s"]
+
+    def moments(pdf: pd.DataFrame) -> np.ndarray:
+        # flat layout: [count, Σx (dim), row-major ΣxxT (dim²)]
+        x = vectors(pdf[vec_col])
+        return np.concatenate(([float(len(x))], x.sum(axis=0), (x.T @ x).ravel()))
+
+    flat = batch_sum(vecs, 1 + dim + dim * dim, moments)
     n = flat[0]
     mean = flat[1 : 1 + dim] / n
     gram = flat[1 + dim :].reshape(dim, dim)
@@ -113,7 +89,7 @@ def project(
         mask = vecs.notna()
         out = pd.Series([None] * len(vecs), dtype=object, index=vecs.index)
         if mask.any():
-            x = np.asarray(list(vecs[mask]), dtype=np.float64)
+            x = vectors(vecs[mask])
             proj = (x - mu) @ w.T
             out.loc[mask] = pd.Series(
                 list(proj), index=vecs.index[mask], dtype=object

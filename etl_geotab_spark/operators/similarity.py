@@ -13,6 +13,10 @@ Two tiers:
   into a bucket-partitioned equi-join — the scale path.
 - ``embedding_near_dup_pairs`` — near-duplicate detection as a
   self-ANN: pairs with cosine >= threshold via bucketed self-join.
+- ``ivf_topk`` / ``build_ivf_index`` — approximate: an inverted file
+  over cosine centroids. The refine rounds are ``kernels.lloyd_round``
+  and the corpus/probe assignment is ``kernels.nearest``, the same
+  kernels k-means runs under the euclidean metric.
 """
 
 from __future__ import annotations
@@ -28,6 +32,12 @@ from etl_geotab_spark.functions.vector import (
     dot_product,
     l2_norm,
     unit_vector,
+)
+from etl_geotab_spark.operators.kernels import (
+    lloyd_round,
+    nearest,
+    unit_rows,
+    vectors,
 )
 
 
@@ -110,16 +120,16 @@ def cosine_topk_blas(
     q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
     qraw = np.array([r[1] for r in qrows], dtype=np.float64)
     q_zero = np.linalg.norm(qraw, axis=1) == 0
-    qmat = _unit_rows(qraw)
+    qmat = unit_rows(qraw)
 
     def local_topk(batches):
         for pdf in batches:
             if pdf.empty:
                 continue
             c_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            craw = np.array(list(pdf[vec_col]), dtype=np.float64)
+            craw = vectors(pdf[vec_col])
             cn = np.linalg.norm(craw, axis=1)
-            sims = qmat @ _unit_rows(craw).T  # (n_queries, batch)
+            sims = qmat @ unit_rows(craw).T  # (n_queries, batch)
             if not include_self:
                 sims[q_ids[:, None] == c_ids[None, :]] = -np.inf
             sims[:, cn == 0] = -np.inf  # zero corpus vectors rank last
@@ -197,7 +207,7 @@ def lsh_signature_arrow(planes: list[list[float]]):
 
     @pandas_udf("string")
     def _sig(vecs: pd.Series) -> pd.Series:
-        x = np.asarray(list(vecs), dtype=np.float64)
+        x = vectors(vecs)
         if x.size == 0:
             return pd.Series([], dtype=object)
         bits = (x @ pmat.T) >= 0
@@ -466,10 +476,11 @@ def ivf_topk(
     ANN strategy, complementary to LSH bucketing:
 
     1. centroids: a deterministic hash-sample of corpus vectors,
-       optionally sharpened by ``refine_iters`` Lloyd rounds (assign →
-       per-dimension mean; each round is one broadcast-assign + one
-       (centroid, dim) partial aggregate — measured at fixture scale
-       this lifts recall@10 from ~0.5 to ~0.8 at the same n_probe);
+       optionally sharpened by ``refine_iters`` cosine Lloyd rounds
+       (``kernels.lloyd_round``: one fused Arrow assign + partial-sum
+       scan and one (centroid, dim) aggregate — measured at fixture
+       scale this lifts recall@10 from ~0.5 to ~0.8 at the same
+       n_probe);
     2. assign: every corpus vector joins its nearest centroid (one
        broadcast of the tiny centroid set, one shuffle on centroid_id)
        — this is the inverted file, built ONCE and reusable across
@@ -486,8 +497,8 @@ def ivf_topk(
         corpus, vec_col, id_col, num_centroids, seed, refine_iters
     )
     # 3. queries probe their n_probe nearest lists
-    probes = _nearest_centroids(
-        queries.select(id_col, vec_col), cents, vec_col, id_col, n_probe, "centroid_id"
+    probes = nearest(
+        queries.select(id_col, vec_col), vec_col, cents, "cosine", n_probe, "centroid_id"
     ).select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("_qvec"),
@@ -514,111 +525,6 @@ def _ivf_sample_centroids(corpus, vec_col, id_col, num_centroids, seed):
         .collect()
     )
     return [[float(x) for x in r[vec_col]] for r in rows]
-
-
-def _unit_rows(mat):
-    """Unit-normalize matrix rows; zero rows pass through unchanged."""
-    nrm = np.linalg.norm(mat, axis=1)
-    return mat / np.where(nrm == 0, 1.0, nrm)[:, None]
-
-
-def _nearest_centroids(df, centroids: list[list[float]], vec_col, id_col, n, out):
-    """top-n centroids per row by cosine, as ONE Arrow projection: the
-    centroid list (k×dim, bounded by contract — the same driver-side
-    budget as lloyd_kmeans) ships in the UDF closure; each batch pays a
-    single float64 matmul + argsort. No crossJoin row expansion, no
-    groupBy/window shuffle — the expression form this replaces paid a
-    corpus×k crossJoin plus a max_by hash aggregate PER assignment
-    call (one per Lloyd round, one for the inverted file, one per
-    query batch). Ties break to the smaller centroid_id (argmax /
-    stable argsort keep the first maximum; centroid ids are
-    positional ascending), matching the old max_by/window ordering."""
-    cmat = _unit_rows(np.asarray(centroids, dtype=np.float64))
-
-    # r18 (guide §4.4): downstream equi-joins on the assignment column
-    # make the optimizer infer an IS NOT NULL filter on the UDF output
-    # and push it below the projection BY DUPLICATING THE UDF — the IVF
-    # plans carried two chained ArrowEvalPython nodes per side, so the
-    # full-corpus assignment pass (the expensive stage at 100 TB) ran
-    # twice. asNondeterministic forbids the duplication; the inferred
-    # filter runs once, above a single evaluation. Values unchanged
-    # (the functions are pure; the marker only constrains the
-    # optimizer). Plans: plans/r18/ivf_ann_topk_{before,after}.txt.
-    if n == 1:
-
-        @pandas_udf("long")
-        def _nearest(vecs: pd.Series) -> pd.Series:
-            x = np.asarray(list(vecs), dtype=np.float64)
-            if x.size == 0:
-                return pd.Series([], dtype="int64")
-            sims = _unit_rows(x) @ cmat.T
-            return pd.Series(np.argmax(sims, axis=1).astype("int64"))
-
-        return df.withColumn(out, _nearest.asNondeterministic()(F.col(vec_col)))
-
-    @pandas_udf("array<long>")
-    def _topn(vecs: pd.Series) -> pd.Series:
-        x = np.asarray(list(vecs), dtype=np.float64)
-        if x.size == 0:
-            return pd.Series([], dtype=object)
-        sims = _unit_rows(x) @ cmat.T
-        order = np.argsort(-sims, axis=1, kind="stable")[:, :n]
-        return pd.Series([row.tolist() for row in order])
-
-    out_cols = df.columns
-    return df.withColumn(
-        "_probes", _topn.asNondeterministic()(F.col(vec_col))
-    ).select(*out_cols, F.explode("_probes").alias(out))
-
-
-def _ivf_refine_once(corpus, centroids: list[list[float]], vec_col, id_col):
-    """One Lloyd round under the cosine metric: fused Arrow
-    assign+partial-sum (argmax cosine per batch, then per-centroid
-    (sum, count) partials — the map-side combine), one k×dim groupBy
-    merge, k×dim rows to the driver. Replaces the old
-    assign-shuffle + posexplode(dim×N rows) + collect_list round —
-    same contract as kmeans.py's fused iteration, cosine instead of
-    euclidean. A centroid that captured nothing keeps its previous
-    vector instead of vanishing — otherwise the index silently
-    shrinks below num_centroids (and the n_probe fraction lies)."""
-    cmat = _unit_rows(np.asarray(centroids, dtype=np.float64))
-    dim = cmat.shape[1]
-
-    def gen(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.asarray(list(pdf[vec_col]), dtype=np.float64)
-            a = np.argmax(_unit_rows(x) @ cmat.T, axis=1)
-            out = []
-            for c in np.unique(a):
-                xs = x[a == c]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "cid": np.full(dim, c, dtype=np.int64),
-                            "pos": np.arange(dim, dtype=np.int32),
-                            "s": xs.sum(axis=0),
-                            "n": np.full(dim, xs.shape[0], dtype=np.int64),
-                        }
-                    )
-                )
-            yield pd.concat(out, ignore_index=True)
-
-    merged = (
-        corpus.select(vec_col)
-        .mapInPandas(gen, "cid long, pos int, s double, n long")
-        .groupBy("cid", "pos")
-        .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-        .collect()
-    )
-    means: dict[int, dict[int, float]] = {}
-    for r in merged:
-        means.setdefault(r["cid"], {})[r["pos"]] = r["s"] / r["n"]
-    return [
-        [means[i][p] for p in sorted(means[i])] if i in means else c
-        for i, c in enumerate(centroids)
-    ]
 
 
 def _probe_and_rank(
@@ -694,8 +600,8 @@ def ivf_index_topk(
         spark.read.parquet(f"{path}/centroids").orderBy("centroid_id").collect()
     )
     cents = [[float(x) for x in r["cvec"]] for r in crows]
-    probes = _nearest_centroids(
-        queries.select(id_col, vec_col), cents, vec_col, id_col, n_probe, "centroid_id"
+    probes = nearest(
+        queries.select(id_col, vec_col), vec_col, cents, "cosine", n_probe, "centroid_id"
     ).select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("_qvec"),
@@ -715,12 +621,12 @@ def _ivf_build(corpus, vec_col, id_col, num_centroids, seed, refine_iters):
     """Centroid list + inverted file, the shared build path of ivf_topk
     and build_ivf_index (identical determinism: same seed → same
     index). Centroids live driver-side between rounds (k×dim, bounded)
-    — each refine round is one fused Arrow scan + one k×dim aggregate,
-    and the final assignment is a single Arrow projection."""
+    — each refine round is one cosine ``lloyd_round``, and the final
+    assignment is a single ``nearest`` projection."""
     cents = _ivf_sample_centroids(corpus, vec_col, id_col, num_centroids, seed)
     for _ in range(refine_iters):
-        cents = _ivf_refine_once(corpus, cents, vec_col, id_col)
-    inverted = _nearest_centroids(
-        corpus.select(id_col, vec_col), cents, vec_col, id_col, 1, "centroid_id"
+        cents = lloyd_round(corpus, vec_col, cents, "cosine").tolist()
+    inverted = nearest(
+        corpus.select(id_col, vec_col), vec_col, cents, "cosine", 1, "centroid_id"
     )
     return cents, inverted

@@ -20,7 +20,7 @@ Faithfulness traps handled (SURVEY.md §4):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, DataFrameReader
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
@@ -146,7 +146,15 @@ def read_geotab(
     ``spark.read`` or ``spark.readStream``; ``opts`` are further reader
     options. The wire schemas are fixed constants (task.ts:12-55), and
     passing them explicitly skips a Python-planner round trip per load
-    (the DataSource.schema() call spawns a worker; ~0.6 s each)."""
+    (the DataSource.schema() call spawns a worker; ~0.6 s each).
+
+    A batch scan packs its groups into at most ``defaultParallelism //
+    3`` partitions (at least 1), one ``Get`` per partition: a tick runs
+    three scans concurrently, so together they fill the cluster's slots
+    at most once — the rule Spark uses to pack small files into about
+    ``defaultParallelism`` splits. A task per group would pay the fixed
+    JVM↔Python crossing cost once per group for a handful of rows
+    (SCALE.md §7)."""
     from etl_geotab_spark.sources.geotab import _SCHEMAS
 
     options = {
@@ -154,8 +162,11 @@ def read_geotab(
         "transport": transport,
         "sessionid": session_id,
         "groups": ",".join(groups),
-        **opts,
     }
+    if isinstance(source, DataFrameReader):
+        slots = source._spark.sparkContext.defaultParallelism
+        options["maxpartitions"] = str(max(1, slots // 3))
+    options.update(opts)
     return source.format("geotab").schema(_SCHEMAS[entity]).options(**options).load()
 
 
@@ -175,13 +186,8 @@ def run_connector_pipeline(
     (pushdown; each a few multi-group ``Get`` partitions) →
     wire→relational adapters → ``geotab_pipeline`` → feature rows.
 
-    Each scan packs its groups into at most ``defaultParallelism // 3``
-    partitions (at least 1), one ``Get`` per partition: the three scans
-    run concurrently, so together they fill the cluster's slots at most
-    once — the rule Spark uses to pack small files into about
-    ``defaultParallelism`` splits. A task per group would pay the fixed
-    JVM↔Python crossing cost once per group for a handful of rows
-    (SCALE.md §7).
+    Each scan is sized by ``read_geotab``: at most
+    ``defaultParallelism // 3`` partitions, one ``Get`` each.
 
     ``materialize`` (default on) runs the three scans CONCURRENTLY and
     snapshots each into executor storage (``localCheckpoint``) before
@@ -215,19 +221,7 @@ def run_connector_pipeline(
     )
 
     register_geotab_source(spark)  # also turns on the pushdown gate conf
-    max_partitions = max(1, spark.sparkContext.defaultParallelism // 3)
-
-    def read(entity: str, **opts):
-        return read_geotab(
-            spark.read,
-            entity,
-            groups,
-            transport,
-            session_id,
-            maxpartitions=str(max_partitions),
-            **opts,
-        )
-
+    fleet = (groups, transport, session_id)
     fetches = [
         ("DeviceStatusInfo", device_status_relational, {}),
         ("Device", devices_relational, {"excludeuntrackedassets": "true"}),
@@ -238,7 +232,8 @@ def run_connector_pipeline(
 
         def fetch(spec):
             entity, adapter, opts = spec
-            return adapter(read(entity, **opts)).localCheckpoint(eager=True)
+            scan = read_geotab(spark.read, entity, *fleet, **opts)
+            return adapter(scan).localCheckpoint(eager=True)
 
         with ThreadPoolExecutor(len(fetches)) as ex:
             futures = [ex.submit(fetch, spec) for spec in fetches]
@@ -250,7 +245,8 @@ def run_connector_pipeline(
         status, devices, drivers = done
     else:
         status, devices, drivers = (
-            adapter(read(entity, **opts)) for entity, adapter, opts in fetches
+            adapter(read_geotab(spark.read, entity, *fleet, **opts))
+            for entity, adapter, opts in fetches
         )
     feats = geotab_pipeline(
         devices, status, drivers, prefix=prefix, now=now, freshness=freshness

@@ -2749,14 +2749,12 @@ def q_kmeans_embeddings(spark: SparkSession, sf: str) -> DataFrame:
     low cluster id) but 5-round iterative → not one SQL statement;
     tests/test_operators.py asserts determinism and that iterations
     never increase total inertia."""
-    from etl_geotab_spark.operators.kmeans import assign_clusters, lloyd_kmeans
+    from etl_geotab_spark.operators.kmeans import _sq_dist, lloyd_kmeans
 
     emb = _spread(_t(spark, sf, "embeddings")).persist()
     assigned, centroids = lloyd_kmeans(
         emb, vec_col="embedding", id_col="vec_id", k=8, iters=5
     )
-    from etl_geotab_spark.operators.kmeans import _sq_dist
-
     dists = assigned.withColumn(
         "d2",
         F.array(

@@ -471,26 +471,21 @@ def test_csv_json_roundtrip(spark, tmp_path):
     assert sorted(map(tuple, back_json.select(*nation.columns).collect())) == want
 
 
-def test_kmeans_deterministic_and_converging(spark):
+def test_kmeans_deterministic_and_converging(spark, sf_dir):
     """Lloyd's: same input → same centroids; inertia never increases."""
-    from etl_geotab_spark.operators.kmeans import (
-        _sq_dist,
-        assign_clusters,
-        lloyd_kmeans,
-    )
-    from etl_geotab_spark.io import load_table
-    from pyspark.sql import functions as F
+    import numpy as np
 
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
+    from etl_geotab_spark.io import load_table
+    from etl_geotab_spark.operators.kmeans import lloyd_kmeans
+
+    emb = load_table(spark, sf_dir, "embeddings")
     assert emb.count() == 500  # r16 §26b: determinism/convergence
     # checks below would hold trivially on an empty read
+    X = np.array([r[0] for r in emb.select("embedding").collect()], dtype=np.float64)
 
     def inertia(centroids):
-        assigned = assign_clusters(emb, "embedding", centroids)
-        d2 = F.array(
-            *[_sq_dist(F.col("embedding"), c) for c in centroids]
-        )[F.col("cluster")]
-        return assigned.agg(F.sum(d2)).collect()[0][0]
+        C = np.asarray(centroids)
+        return ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2).min(axis=1).sum()
 
     _, c1 = lloyd_kmeans(emb, k=4, iters=1)
     _, c3 = lloyd_kmeans(emb, k=4, iters=3)
@@ -502,6 +497,81 @@ def test_kmeans_deterministic_and_converging(spark):
     clusters = {r["cluster"] for r in assigned.select("cluster").collect()}
     assert clusters <= set(range(4))
     assert len(cents) == 4
+
+
+def _numpy_assign(X, C, metric):
+    """Nearest centroid per row; argmin/argmax keep the first optimum,
+    so ties go to the lowest centroid id."""
+    import numpy as np
+
+    if metric == "euclidean":
+        return ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
+
+    def unit(M):
+        n = np.linalg.norm(M, axis=1)
+        return M / np.where(n == 0, 1.0, n)[:, None]
+
+    return (unit(X) @ unit(C).T).argmax(axis=1)
+
+
+def _numpy_lloyd(X, C, metric, iters):
+    """Plain Lloyd loop: a centroid that captures nothing keeps its
+    vector. Returns (centroids, final assignment)."""
+    import numpy as np
+
+    for _ in range(iters):
+        a = _numpy_assign(X, C, metric)
+        C = np.array(
+            [X[a == j].mean(axis=0) if (a == j).any() else C[j] for j in range(len(C))]
+        )
+    return C, _numpy_assign(X, C, metric)
+
+
+@pytest.mark.parametrize("metric", ["euclidean", "cosine"])
+def test_lloyd_matches_numpy_reference(spark, sf_dir, metric):
+    """k-means (euclidean) and the IVF build (cosine) against a plain
+    numpy Lloyd loop from the same seeds. One extra row copies a seed's
+    vector under an id that is seeded first, so round 1 starts with two
+    identical centroids: every tie must go to the lower id, and the
+    other centroid, left empty, must keep its vector."""
+    import hashlib
+    import itertools
+
+    import numpy as np
+
+    from etl_geotab_spark.io import load_table
+    from etl_geotab_spark.operators.kmeans import lloyd_kmeans
+    from etl_geotab_spark.operators.similarity import _ivf_build
+
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    rows = [(r.vec_id, list(r.embedding)) for r in emb.collect()]
+    k, iters = 8, 3
+    if metric == "euclidean":  # seeds: the k lowest ids
+        rank = lambda i: i  # noqa: E731
+        dup_id = min(i for i, _ in rows) - 1
+    else:  # seeds: the k smallest md5(seed || id)
+        rank = lambda i: hashlib.md5(f"42{i}".encode()).hexdigest()  # noqa: E731
+        first = min(rank(i) for i, _ in rows)
+        dup_id = next(i for i in itertools.count(10**6) if rank(i) < first)
+    rows.append((dup_id, min(rows, key=lambda r: rank(r[0]))[1]))
+    corpus = spark.createDataFrame(rows, emb.schema)
+
+    ids = [i for i, _ in rows]
+    X = np.array([v for _, v in rows], dtype=np.float64)
+    seeds = X[sorted(range(len(rows)), key=lambda n: rank(ids[n]))[:k]]
+    first_round = _numpy_assign(X, seeds, metric)
+    assert 0 in first_round and 1 not in first_round  # the tie, the empty
+
+    if metric == "euclidean":
+        assigned, cents = lloyd_kmeans(corpus, k=k, iters=iters)
+        got = assigned.select("vec_id", "cluster").collect()
+    else:
+        cents, inverted = _ivf_build(corpus, "embedding", "vec_id", k, 42, iters)
+        got = inverted.select("vec_id", "centroid_id").collect()
+    want_c, want_a = _numpy_lloyd(X, seeds, metric, iters)
+    err = float(np.abs(np.asarray(cents) - want_c).max())
+    assert err <= 1e-9, f"centroids differ from numpy by {err}"
+    assert dict(map(tuple, got)) == dict(zip(ids, want_a.tolist()))
 
 
 def test_grid_spatial_join_matches_naive(spark):

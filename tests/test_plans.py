@@ -14,6 +14,8 @@ from __future__ import annotations
 import sys
 from pathlib import Path
 
+import pytest
+
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from tools.explain_audit import audit_plans  # noqa: E402
@@ -75,11 +77,14 @@ def test_private_api_seams_pinned(spark):
     assert _spread_adaptive(df).rdd.getNumPartitions() == 1
 
 
-def test_block_release_helpers(spark):
+def test_block_release_helpers(spark, monkeypatch):
     """blocks.py (r17 verdict item 3): release_checkpoint frees a
     localCheckpoint's blocks, no-ops on a plain projection, and
     release_all_cached leaves ZERO persisted RDDs in the session —
-    the per-query-exit invariant the bench hook relies on."""
+    the per-query-exit invariant the bench hook relies on — without a
+    Java error converted on the way (py4j's map iterator ends in one,
+    ~20 ms a call on every query exit)."""
+    from pyspark.errors.exceptions import captured
     from pyspark.sql import functions as F
 
     from etl_geotab_spark.blocks import (
@@ -114,8 +119,37 @@ def test_block_release_helpers(spark):
     spark.range(50).persist().count()
     spark.range(60).localCheckpoint(eager=True)
     assert persistent_rdd_count(spark) >= 2
-    release_all_cached(spark)
+    converted = []
+    convert = captured.convert_exception
+
+    def counting(e):
+        converted.append(e)
+        return convert(e)
+
+    monkeypatch.setattr(captured, "convert_exception", counting)
+    assert release_all_cached(spark) >= 1
+    monkeypatch.undo()
     assert persistent_rdd_count(spark) == 0
+    assert converted == []
+
+
+@pytest.mark.parametrize(
+    "name, nodes", [("ivf_ann_topk", 2), ("kmeans_embeddings", 1)]
+)
+def test_nearest_centroid_udf_evaluated_once_per_pass(spark, name, nodes):
+    """The nearest-centroid UDF is nondeterministic on purpose: without
+    the marker the optimizer duplicates it under an inferred IS NOT
+    NULL filter (ivf_ann_topk reads 4 ArrowEvalPython nodes instead of
+    one per assignment pass: the corpus and the probes)."""
+    from etl_geotab_spark.blocks import release_all_cached
+    from etl_geotab_spark.queries import queries
+
+    df = queries()[name](spark, SF_DIR)
+    try:
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("ArrowEvalPython") == nodes, plan
+    finally:
+        release_all_cached(spark)
 
 
 def test_iterative_operators_bound_pinned_blocks(spark):

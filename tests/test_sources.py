@@ -722,6 +722,18 @@ def test_connector_pipeline_scans_fill_slots_once(geotab, monkeypatch):
             release_checkpoint(c)
 
 
+def test_read_geotab_sizes_batch_scans(geotab):
+    """Every batch ``read_geotab`` scan — the connector tick's and the
+    stream pipeline's dimension scans alike — packs its groups into
+    ``min(groups, max(1, defaultParallelism // 3))`` partitions."""
+    from etl_geotab_spark.pipeline.geotab import read_geotab
+
+    groups = ("g1", "g2", "g3", "g4")
+    df = read_geotab(geotab.read, "Device", groups, "fake", "s")
+    slots = max(1, geotab.sparkContext.defaultParallelism // 3)
+    assert df.rdd.getNumPartitions() == min(len(groups), slots)
+
+
 def test_connector_pipeline_fetch_error_releases_checkpoints(geotab, monkeypatch):
     """When one of the three concurrent fetches raises, the checkpoints
     the other two completed are released before the error propagates."""
