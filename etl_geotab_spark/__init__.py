@@ -19,8 +19,10 @@ Layout
   (reference parity: task.ts:147-219, 294).
 - ``streaming`` — Structured Streaming equivalents (watermark horizon,
   tumbling/sliding/session windows, scheduled re-pull).
-- ``worker_boot`` — installed on import: Python workers re-read a zip
-  archive on ``sys.path`` only when it changed, not on every task.
+- ``worker_boot`` — Python worker start-up: the worker home ``get_spark``
+  launches the JVM from, so workers import the installed PySpark; and,
+  installed on import, a zip archive on ``sys.path`` is re-read only when
+  it changed, not on every task.
 """
 
 from etl_geotab_spark import worker_boot as _worker_boot

@@ -146,7 +146,7 @@ def read_geotab(
     ``spark.read`` or ``spark.readStream``; ``opts`` are further reader
     options. The wire schemas are fixed constants (task.ts:12-55), and
     passing them explicitly skips a Python-planner round trip per load
-    (the DataSource.schema() call spawns a worker; ~0.6 s each).
+    (the DataSource.schema() call runs in a planner worker).
 
     A batch scan packs its groups into at most ``defaultParallelism //
     3`` partitions (at least 1), one ``Get`` per partition: a tick runs
@@ -192,10 +192,9 @@ def run_connector_pipeline(
     ``materialize`` (default on) runs the three scans CONCURRENTLY and
     snapshots each into executor storage (``localCheckpoint``) before
     the joins — the Spark shape of the reference's ``Promise.all``
-    fetch into in-memory Maps (task.ts:147-218). Three wins, measured:
-    (1) the three driver-side Python planner workers spawn in parallel
-    instead of serially inside one action's planning (~5.4 s → ~3.2 s
-    cold, ~1.6 s warm); (2) the API is hit exactly once per entity per
+    fetch into in-memory Maps (task.ts:147-218). Three wins: (1) the
+    three scans' driver-side Python planning and their jobs run in
+    parallel instead of serially inside one action; (2) the API is hit exactly once per entity per
     invocation even if the downstream plan re-executes (retried stage,
     multiple actions) — re-pulling a live RPC source mid-job could mix
     two snapshot times into one result; (3) a lost block fails hard

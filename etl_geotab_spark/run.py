@@ -117,9 +117,8 @@ def warm(spark: SparkSession, sf_dir: str) -> dict[str, int]:
     ident = pandas_udf(lambda s: s, "long")
     spark.range(64).select(ident(F.col("id"))).count()
     # (d) one tiny Python-DataSource scan: the first one in a session
-    # pays worker-module imports and the scan shape's noop-writer
-    # codegen. The per-load planner worker spawns are a real recurring
-    # cost and stay with the connector query.
+    # starts the planner daemons (later loads reuse their workers) and
+    # pays the scan shape's noop-writer codegen.
     register_geotab_source(spark)
     force(
         spark.read.format("geotab")

@@ -17,6 +17,10 @@ matter. Choices here are the 100 TB-scale defaults scaled down to
   pass at sf0.01 generates ~2,500 distinct classes; at Spark's default
   of 100 entries the LRU thrashes and a second pass recompiled 3,286
   (76 at 4096).
+- Python workers start from the driver's installed, byte-compiled
+  PySpark: before the JVM launches, ``SPARK_HOME`` points at a worker
+  home without ``python/`` (``worker_boot.worker_spark_home``), so no
+  worker compiles ``pyspark.zip`` from source (SCALE.md §7).
 """
 
 from __future__ import annotations
@@ -26,7 +30,10 @@ import os
 import threading
 
 from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
+
+from etl_geotab_spark.worker_boot import worker_spark_home
 
 
 def get_spark(
@@ -89,6 +96,11 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
+    if SparkContext._gateway is None:  # the JVM reads SPARK_HOME at launch
+        home = _find_spark_home()
+        worker_home = worker_spark_home(home)
+        if worker_home != home:
+            os.environ["SPARK_HOME"] = worker_home
     return builder.getOrCreate()
 
 

@@ -117,3 +117,22 @@ def test_missing_sf_rejected_before_git_or_spark(monkeypatch):
     with pytest.raises(SystemExit) as e:
         ab.main(["HEAD", "pricing_summary"])
     assert e.value.code == 2
+
+
+def test_side_starts_from_the_distribution_not_an_inherited_worker_home(
+    monkeypatch, tmp_path
+):
+    """A worker home in the tool's environment belongs to one checkout;
+    each side gets the distribution behind it and builds its own."""
+    dist = tmp_path / "spark"
+    (dist / "bin").mkdir(parents=True)
+    home = tmp_path / "checkout" / ".worker_home" / "spark-0"
+    home.mkdir(parents=True)
+    (home / "bin").symlink_to(dist / "bin")
+    seen = []
+    monkeypatch.setattr(ab.subprocess, "run", lambda argv, **k: seen.append(k["env"]))
+    monkeypatch.setenv("SPARK_HOME", str(home))
+    ab.run_side(str(tmp_path / "a"), str(tmp_path / "b"), "sf", ["q"])
+    monkeypatch.setenv("SPARK_HOME", str(dist))
+    ab.run_side(str(tmp_path / "a"), str(tmp_path / "b"), "sf", ["q"])
+    assert [e["SPARK_HOME"] for e in seen] == [str(dist), str(dist)]

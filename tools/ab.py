@@ -111,6 +111,12 @@ def run_side(checkout: str, other: str, sf: str, names: list[str]):
         if p and os.path.commonpath([other, os.path.realpath(p)]) != other
     ]
     env = {**os.environ, "PYTHONPATH": os.pathsep.join([checkout, *keep])}
+    if "SPARK_HOME" in env:
+        from etl_geotab_spark.worker_boot import spark_distribution
+
+        # a worker home inherited from another checkout: each side starts
+        # from the distribution and builds its own, if its revision has one
+        env["SPARK_HOME"] = spark_distribution(env["SPARK_HOME"])
     return subprocess.run(
         [sys.executable, "-m", "etl_geotab_spark.run",
          "--sf", sf, "--reps", "1", *names],
