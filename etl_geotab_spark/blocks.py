@@ -7,10 +7,12 @@ Two leak classes this module closes (r17 verdict item 3):
    state every round to truncate lineage. Each round's blocks stay
    pinned until the Python objects are garbage collected — O(rounds)
    copies of the state table live in executor storage during the
-   query instead of O(1). ``release_checkpoint`` frees a superseded
-   checkpoint's blocks the moment the next round's checkpoint is
-   materialized (safe exactly then: eager checkpoints have no lineage
-   back into the released RDD, and nothing downstream reads it).
+   query instead of O(1). Their one round step, ``advance``, frees
+   the superseded checkpoint's blocks the moment the next round's
+   checkpoint is materialized (safe exactly then: eager checkpoints
+   have no lineage back into the released RDD, and nothing downstream
+   reads it). The round's convergence values ride on that same job
+   as an ``Observation``, not on a probe action of their own.
 
 2. **Session-lifetime persists.** Operators ``persist()`` shared
    intermediates (band tables, gram tables) and hand the consumer a
@@ -24,7 +26,7 @@ Two leak classes this module closes (r17 verdict item 3):
    catalog cache does not track). ``run.scope`` calls it on every
    query's exit.
 
-Both helpers go through private seams (``_jdf``/``_jsc``) because
+The release helpers go through private seams (``_jdf``/``_jsc``) because
 PySpark exposes no public API for "the RDD behind this checkpointed
 DataFrame" or "all persisted RDDs"; they are pinned by tests
 (tests/test_plans.py) so a PySpark upgrade fails loudly instead of
@@ -34,7 +36,7 @@ an optimization, never worth failing a query over.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 
 def release_checkpoint(df: DataFrame) -> bool:
@@ -56,6 +58,23 @@ def release_checkpoint(df: DataFrame) -> bool:
         return True
     except Exception:
         return False
+
+
+def advance(
+    prev: DataFrame | None, nxt: DataFrame, *observed: Column
+) -> tuple[DataFrame, dict]:
+    """Checkpoint ``nxt`` eagerly (the round's only action), then release
+    ``prev`` unless it is None. Returns the checkpoint and the
+    ``observed`` aggregates over ``nxt``, read after that job returns:
+    a failed job raises instead of leaving ``Observation.get`` waiting."""
+    if observed:
+        obs = Observation()
+        nxt = nxt.observe(obs, *observed)
+    ckpt = nxt.localCheckpoint(eager=True)
+    metrics = obs.get if observed else {}
+    if prev is not None:
+        release_checkpoint(prev)
+    return ckpt, metrics
 
 
 def release_all_cached(spark: SparkSession) -> int:

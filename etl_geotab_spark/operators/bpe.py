@@ -12,8 +12,8 @@ no Python UDF, no explode-per-character.
 
 Scale design per iteration: one map-side-combined pair count, ONE
 bounded driver pull (the argmax row — k=1, never data-sized), one
-map-only fold over the vocab, ``localCheckpoint`` to truncate the
-iterative lineage (same rule as operators/clusters.py).
+map-only fold over the vocab, checkpointed by ``blocks.advance`` to
+truncate the iterative lineage (same rule as operators/clusters.py).
 """
 
 from __future__ import annotations
@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from etl_geotab_spark.blocks import release_checkpoint
+from etl_geotab_spark.blocks import advance
 
 MERGES_SCHEMA = (
     "step INT, left STRING, right STRING, merged STRING, pair_count BIGINT"
@@ -104,14 +104,9 @@ def learn_bpe_merges(
             break
         b = best[0]
         merges.append((step_i, b.left, b.right, b.left + b.right, b.n))
-        # iterative op ⇒ truncate lineage each round (clusters.py rule);
-        # release the superseded round's blocks once the new eager
-        # checkpoint exists (guide §5 — O(1) pinned copies, not O(steps))
-        prev = vocab
-        vocab = vocab.withColumn(
-            "syms", _fuse(F.col("syms"), b.left, b.right)
-        ).localCheckpoint()
-        release_checkpoint(prev)
+        # iterative op ⇒ truncate lineage each round (clusters.py rule)
+        fused = vocab.withColumn("syms", _fuse(F.col("syms"), b.left, b.right))
+        vocab, _ = advance(vocab, fused)
 
     return spark.createDataFrame(merges, MERGES_SCHEMA)
 

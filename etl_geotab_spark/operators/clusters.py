@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from etl_geotab_spark.blocks import release_checkpoint
+from etl_geotab_spark.blocks import advance
 
 
 def connected_components(
@@ -34,9 +34,9 @@ def connected_components(
     Iterates min-id label propagation to a fixed point: each node
     adopts the smallest label among itself and its neighbors. Each
     round: one groupBy shuffle + one broadcast-or-shuffle join. The
-    label table is persisted per round and the loop exits early when
-    no label changes (checked with a cheap aggregate, not a collect of
-    the data).
+    label table is checkpointed per round, and the loop exits early
+    when no label changed — a count observed on that checkpoint's own
+    job, not a separate scan.
     """
     # Iterative algorithm ⇒ TRUNCATE lineage every round, or round N
     # re-executes rounds 0..N-1 (measured: a 0.7 s round ballooned to
@@ -75,15 +75,15 @@ def connected_components(
         .withColumn("comp", F.col("node"))
         .localCheckpoint()
     )
-    labels_ckpt = labels  # the round's checkpointed frame (releasable)
 
     for _ in range(max_iterations):
-        # One round = propagate + pointer-jump + change flag, fused into
-        # a SINGLE materialization. Iterative graph algorithms on Spark
-        # are dominated by per-round JOB overhead at the small end and
-        # by shuffle count at the large end — fusing cuts both: 2 jobs
-        # per round (one checkpoint, one early-exit convergence scan)
-        # instead of the naive 4 (propagate ckpt, jump ckpt, count).
+        # One round = propagate + pointer-jump, fused into a SINGLE
+        # materialization whose job also counts the changed labels.
+        # Iterative graph algorithms on Spark are dominated by
+        # per-round JOB overhead at the small end and by shuffle count
+        # at the large end — fusing cuts both: one action per round
+        # instead of the naive 3 (propagate ckpt, jump ckpt, convergence
+        # scan).
         #
         # (1) propagate: min component id across incident edges
         neighbor_min = (
@@ -107,34 +107,21 @@ def connected_components(
         lookup = propagated.select(
             F.col("node").alias("_n"), F.col("comp1").alias("_c")
         )
-        new_labels = (
-            propagated.join(lookup, propagated.comp1 == lookup._n, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("comp1"), F.coalesce(F.col("_c"), F.col("comp1"))
-                ).alias("comp"),
-                (
-                    F.least(
-                        F.col("comp1"), F.coalesce(F.col("_c"), F.col("comp1"))
-                    )
-                    != F.col("comp0")
-                ).alias("_changed"),
-            )
-            .localCheckpoint()
+        new_labels = propagated.join(
+            lookup, propagated.comp1 == lookup._n, "left"
+        ).select(
+            "node",
+            F.least(
+                F.col("comp1"), F.coalesce(F.col("_c"), F.col("comp1"))
+            ).alias("comp"),
+            "comp0",
         )
-        # convergence probe: scan-only (data already checkpointed),
-        # limit(1) stops at the first changed row.
-        changed = new_labels.where(F.col("_changed")).limit(1).count()
-        # r18 (guide §5): the superseded round's label blocks are dead
-        # once the new eager checkpoint exists — release them instead
-        # of pinning O(rounds) copies of the label table to query end.
-        # (`labels` itself is a projection over the checkpoint after
-        # round 1, so the releasable frame is tracked separately.)
-        release_checkpoint(labels_ckpt)
-        labels_ckpt = new_labels
-        labels = new_labels.drop("_changed")
-        if changed == 0:
+        labels, m = advance(
+            labels,
+            new_labels,
+            F.count_if(F.col("comp") != F.col("comp0")).alias("changed"),
+        )
+        if m["changed"] == 0:
             break
     return labels.select(F.col("node"), F.col("comp").alias("component"))
 

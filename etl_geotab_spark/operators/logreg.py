@@ -24,6 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_geotab_spark.blocks import advance
 from etl_geotab_spark.operators.kernels import batch_sum, vectors
 
 WEIGHTS_SCHEMA = "feature_idx INT, weight DOUBLE"
@@ -44,10 +45,12 @@ def train_logreg(
     """Train w (dim weights + bias at index ``dim``) by full-batch GD
     on sigmoid cross-entropy. Returns (feature_idx, weight)."""
     spark = df.sparkSession
-    data = df.select(
+    # freeze input once (iterations re-scan this); its row count rides
+    # on the checkpoint's own job
+    data, m = advance(None, df.select(
         F.col(features_col).alias("x"), F.col(label_col).cast("int").alias("y")
-    ).localCheckpoint()  # freeze input once; iterations re-scan this
-    n_total = data.count()
+    ), F.count(F.lit(1)).alias("n"))
+    n_total = m["n"]
     if n_total == 0:
         # grad/n_total would divide by zero and silently return
         # NaN/inf weights (numpy only warns) — fail loudly instead

@@ -11,13 +11,17 @@ Scale design (100 TB of edges): each iteration is
     contribs: ranks ⋈ edges on src (both pre-partitioned on the join
               key — co-partitioned shuffle once, reused every round),
               then groupBy(dst) SUM with map-side partial aggregation.
-    dangling: nodes without out-edges leak rank mass; their total is a
-              1-row aggregate collected per round (a bounded scalar,
-              not data) and redistributed uniformly.
+    dangling: nodes without out-edges leak rank mass; each node carries
+              a dangling flag fixed once with the node table, and the
+              round's total dangling mass (a bounded scalar, not data)
+              is observed on the rank checkpoint's own job, then
+              redistributed uniformly in the next round.
 
 Lineage: iterative plans grow exponentially under AQE re-planning —
-`localCheckpoint(eager=True)` every round truncates it (same policy as
-clusters.py; on a real cluster use reliable checkpointing to HDFS).
+`localCheckpoint(eager=True)` every round truncates it (the
+`blocks.advance` round step, as in clusters.py; on a real cluster use
+reliable checkpointing to HDFS). One action per round: no count, no
+collect.
 
 Determinism: rank sums are float adds across partitions → stable to
 ~1e-12 ulps, not bit-exact; queries()/tests treat PageRank as
@@ -30,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from etl_geotab_spark.blocks import release_checkpoint
+from etl_geotab_spark.blocks import advance
 
 
 def pagerank(
@@ -41,8 +45,8 @@ def pagerank(
     iters: int = 8,
 ) -> DataFrame:
     """Power-iteration PageRank; returns (node, rank) with ranks
-    summing to 1. Edges are directed; pass both directions for an
-    undirected graph."""
+    summing to 1 (no rows for an empty edge frame). Edges are
+    directed; pass both directions for an undirected graph."""
     # r17 batch 3 (guide §5): materialize the edge list ONCE before the
     # loop-invariant derivations. `e` feeds nodes (two union branches),
     # out_deg and e_deg — five evaluations of the caller's edge
@@ -60,80 +64,52 @@ def pagerank(
     # identical top-20 output; at cluster scale this removes the
     # O(iters) re-shuffles of the EDGE table — the dominant shuffle
     # mass, since edges >> nodes on any real graph.
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .repartition(F.col("node"))
-        .localCheckpoint(eager=True)
+    # Each node carries its dangling flag (no out-edges: it appears
+    # only as a dst), so each rank checkpoint observes the round's
+    # dangling mass on its own job — no per-round collect.
+    nodes, m = advance(
+        None,
+        e.selectExpr("src AS node", "false AS dangling")
+        .unionByName(e.selectExpr("dst AS node", "true AS dangling"))
+        .groupBy("node")
+        .agg(F.bool_and("dangling").alias("dangling"))
+        .repartition(F.col("node")),
+        F.count(F.lit(1)).alias("n"),
     )
-    n = nodes.count()
+    n = m["n"]
     out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     # edges carry their source degree once, up front — the per-round
-    # join then only touches (node, rank)
-    e_deg = (
-        e.join(out_deg, "src")
-        .select("src", "dst", "deg")
-        .repartition(F.col("src"))
-        .localCheckpoint(eager=True)
+    # join then only touches (node, rank). `e` feeds nothing after
+    # this checkpoint, so advancing releases the raw edge copy: |E|
+    # rows of executor storage freed for the whole iteration phase.
+    e_deg, _ = advance(
+        e, e.join(out_deg, "src").select("src", "dst", "deg").repartition("src")
     )
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
+    if n == 0:
+        return nodes.select("node", F.lit(0.0).alias("rank"))
 
-    # the dangling-node SET is topology-fixed: compute it once; when
-    # it is empty (e.g. any symmetrized graph) the per-round mass
-    # collect — one extra job per iteration — is skipped entirely
-    dangling_nodes = nodes.join(
-        out_deg.withColumnRenamed("src", "node"), "node", "left_anti"
-    ).localCheckpoint(eager=True)
-    has_dangling = dangling_nodes.limit(1).count() > 0
-    # r18 (guide §5, r17 ADVICE): `e` is only consumed by the pre-loop
-    # setup above — every loop-invariant derived from it (nodes, e_deg,
-    # dangling_nodes) is now eagerly checkpointed, so releasing the raw
-    # edge copy here frees |E| rows of executor storage for the whole
-    # iteration phase instead of pinning a duplicate of e_deg.
-    release_checkpoint(e)
-
+    mass = F.sum(F.col("rank") * F.col("dangling").cast("double")).alias("m")
+    ranks, m = advance(None, nodes.withColumn("rank", F.lit(1.0 / n)), mass)
     for _ in range(iters):
         contribs = (
-            e_deg.join(
-                ranks.withColumnRenamed("node", "src"), "src"
-            )
+            e_deg.join(ranks.withColumnRenamed("node", "src"), "src")
             .select("dst", (F.col("rank") / F.col("deg")).alias("c"))
-            .groupBy("dst")
+            .groupBy(F.col("dst").alias("node"))
             .agg(F.sum("c").alias("in_mass"))
         )
-        # dangling nodes (no out-edges) leak their mass: collect the
-        # 1-row scalar and fold it into the teleport term
-        dangling = 0.0
-        if has_dangling:
-            dangling = (
-                ranks.join(dangling_nodes.select("node"), "node", "left_semi")
-                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("m"))
-                .collect()[0]["m"]
-            )
-        base = (1.0 - damping) / n + damping * dangling / n
-        prev = ranks
-        ranks = (
-            nodes.join(
-                contribs.withColumnRenamed("dst", "node"), "node", "left"
-            )
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.lit(damping) * F.coalesce(F.col("in_mass"), F.lit(0.0))
-                ).alias("rank"),
-            )
-            # eager, not lazy: measured at sf0.1 the lazy variant is
-            # ~60% SLOWER (9.7 s vs 6.0 s) — deferring materialization
-            # stacks all rounds into one AQE mega-job that replans and
-            # re-reads worse than one small job per round
-            .localCheckpoint(eager=True)
+        # dangling nodes (no out-edges) leak their mass: fold the
+        # previous round's observed total into the teleport term
+        base = (1.0 - damping) / n + damping * m["m"] / n
+        rank = F.lit(base) + damping * F.coalesce("in_mass", F.lit(0.0))
+        # eager, not lazy: measured at sf0.1 the lazy variant is
+        # ~60% SLOWER (9.7 s vs 6.0 s) — deferring materialization
+        # stacks all rounds into one AQE mega-job that replans and
+        # re-reads worse than one small job per round
+        ranks, m = advance(
+            ranks,
+            nodes.join(contribs, "node", "left").select(
+                "node", "dangling", rank.alias("rank")
+            ),
+            mass,
         )
-        # r18 (guide §5): the superseded round's rank blocks are dead
-        # the moment the new eager checkpoint exists (round 0's `ranks`
-        # is a plain projection over `nodes`, not a checkpoint — the
-        # helper no-ops there). Without this, O(iters) copies of the
-        # rank table stay pinned until query end.
-        release_checkpoint(prev)
-    return ranks
+    return ranks.select("node", "rank")

@@ -7152,11 +7152,12 @@ def q_pagerank_parts(spark: SparkSession, sf: str) -> DataFrame:
     """PageRank centrality over the part co-purchase graph — the same
     1-in-5-category basket edges as triangle_count/association_rules,
     symmetrized (operators/pagerank.py: per-round co-partitioned
-    join + map-side-combined SUM; dangling mass folded in as a 1-row
-    scalar; lineage truncated per round). Rows-only by design (float
-    mass sums are partition-order sensitive at ~1e-12); invariants
-    (Σrank = 1, convergence vs a numpy power iteration on the same
-    edges) are pytest-gated. Returns the top 20 hub parts."""
+    join + map-side-combined SUM; dangling mass observed on each
+    round's checkpoint; lineage truncated per round). Rows-only by
+    design (float mass sums are partition-order sensitive at ~1e-12);
+    invariants (Σrank = 1, agreement with a numpy power iteration on
+    the same edges, this query's top 20 included) are pytest-gated.
+    Returns the top 20 hub parts."""
     from etl_geotab_spark.operators.pagerank import pagerank
 
     b = (

@@ -9,8 +9,11 @@ isolated timing.
   plan and pinned block and collects both heaps.
 - ``run(spark, name, sf_dir)`` forces one query to the noop sink
   (full computation, no driver collect) inside that scope and returns
-  ``{"name", "wall_s", "error", "released"}``. ``wall_s`` covers plan
-  construction plus the force; the release is outside it.
+  ``{"name", "wall_s", "build_s", "jobs", "error", "released"}``.
+  ``wall_s`` covers plan construction plus the force; the release is
+  outside it. ``build_s`` is the plan construction alone and ``jobs``
+  the number of Spark jobs it ran (checkpoints, probes, driver pulls
+  and their AQE stage jobs), counted in the query's job group.
 
 Isolated timing from the command line, on one warmed session::
 
@@ -18,8 +21,8 @@ Isolated timing from the command line, on one warmed session::
 
 ``--sf`` defaults to ``$SPARK_GRAFT_SF_DIR`` (as ``bench.py``);
 ``--reps`` (default 3) runs per query. Prints one JSON line per query,
-``{name: {"best": s, "samples": [s, ...]}}``, then all of them as one
-line.
+``{name: {"best": s, "samples": [s, ...], "build_s": [s, ...],
+"jobs": [n, ...]}}``, then all of them as one line.
 """
 
 from __future__ import annotations
@@ -80,15 +83,30 @@ def scope(spark: SparkSession, name: str) -> Iterator[dict]:
             sc.setLocalProperty(k, v)
 
 
+def _group_jobs(spark: SparkSession, group: str) -> set[int]:
+    """Ids of the jobs Spark's status store holds for job group
+    ``group``, once the listener bus (which feeds the store
+    asynchronously) is drained."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def run(spark: SparkSession, name: str, sf_dir: str) -> dict:
     """Build query ``name`` at ``sf_dir`` and force it, inside
     ``scope``. A failure is recorded in ``error``, not raised."""
     with scope(spark, name) as rec:
-        rec.update(name=name, wall_s=-1.0, error=None)
-        t0 = time.time()
+        rec.update(name=name, wall_s=-1.0, build_s=-1.0, jobs=-1, error=None)
         try:
-            force(queries()[name](spark, sf_dir))
-            rec["wall_s"] = round(time.time() - t0, 3)
+            before = _group_jobs(spark, name)
+            t0 = time.time()
+            df = queries()[name](spark, sf_dir)
+            build_s = time.time() - t0
+            rec["jobs"] = len(_group_jobs(spark, name) - before)
+            t1 = time.time()
+            force(df)
+            rec["wall_s"] = round(build_s + time.time() - t1, 3)
+            rec["build_s"] = round(build_s, 3)
         except Exception as e:  # noqa: BLE001
             rec["error"] = f"{type(e).__name__}: {e}"
     return rec
@@ -196,8 +214,14 @@ def main(argv: list[str] | None = None) -> int:
         warm(spark, a.sf)
         for n in a.names:
             recs = [run(spark, n, a.sf) for _ in range(a.reps)]
-            samples = [r["wall_s"] for r in recs if r["error"] is None]
-            results[n] = {"best": min(samples, default=-1.0), "samples": samples}
+            ok = [r for r in recs if r["error"] is None]
+            samples = [r["wall_s"] for r in ok]
+            results[n] = {
+                "best": min(samples, default=-1.0),
+                "samples": samples,
+                "build_s": [r["build_s"] for r in ok],
+                "jobs": [r["jobs"] for r in ok],
+            }
             errors = [r["error"] for r in recs if r["error"] is not None]
             if errors:
                 results[n]["error"] = errors[0]

@@ -1289,6 +1289,7 @@ def test_operator_surface_handles_empty_inputs(spark):
     empty frames; this pins the rest of the family so the property
     holds as operators evolve."""
     from etl_geotab_spark.operators.asof import asof_join
+    from etl_geotab_spark.operators.bpe import learn_bpe_merges
     from etl_geotab_spark.operators.clusters import connected_components
     from etl_geotab_spark.operators.dedup import (
         dedup_exact,
@@ -1297,6 +1298,7 @@ def test_operator_surface_handles_empty_inputs(spark):
         ngram_jaccard_pairs,
         simhash_near_dup_pairs,
     )
+    from etl_geotab_spark.operators.pagerank import pagerank
     from etl_geotab_spark.operators.similarity import cosine_topk_blas
     from etl_geotab_spark.operators.skew import salted_join
     from etl_geotab_spark.operators.topk import top_k_global, top_k_per_group
@@ -1327,6 +1329,8 @@ def test_operator_surface_handles_empty_inputs(spark):
     ).count() == 0
     assert cosine_topk_blas(emb, emb, k=3).count() == 0
     assert connected_components(edges, "src", "dst").count() == 0
+    assert pagerank(edges).count() == 0
+    assert learn_bpe_merges(doc, "text").count() == 0
 
 
 # ----------------------------------------- bucketed cache hardening (r8)

@@ -156,3 +156,35 @@ class TestPageRank:
         ranks = pagerank(df, iters=5)
         total = ranks.agg(F.sum("rank")).collect()[0][0]
         assert abs(total - 1.0) < 1e-9
+
+    def test_pagerank_parts_matches_numpy(self, spark, sf_dir):
+        """The registered query's top 20 against a numpy power
+        iteration over the same co-purchase graph, rebuilt here from
+        lineitem: two parts in 1-in-5 categories bought in one order
+        share one edge each way. Ranks agree to the query's 8-decimal
+        rounding. (That graph has no dangling nodes; node 6 above
+        covers them.)"""
+        from collections import defaultdict
+
+        from etl_geotab_spark.queries import queries
+        from etl_geotab_spark.run import scope
+
+        with scope(spark, "pagerank_parts"):
+            got = queries()["pagerank_parts"](spark, sf_dir).collect()
+        baskets = defaultdict(set)
+        for r in load_table(spark, sf_dir, "lineitem").collect():
+            if r.l_partkey % 5 == 0:
+                baskets[r.l_orderkey].add(r.l_partkey)
+        pairs = {
+            (a, b) for parts in baskets.values() for a in parts for b in parts
+            if a < b
+        }
+        edges = [e for a, b in pairs for e in ((a, b), (b, a))]
+        ref = _numpy_pagerank(edges, iters=6)
+        assert len(got) == 20 < len(ref)
+        for r in got:
+            assert abs(r["rank"] - ref[r["node"]]) <= 1e-8, (r, ref[r["node"]])
+        # nothing left out ranks above the 20th
+        cutoff = min(r["rank"] for r in got)
+        top = {r["node"] for r in got}
+        assert all(v <= cutoff + 1e-8 for k, v in ref.items() if k not in top)

@@ -181,9 +181,9 @@ def test_iterative_operators_bound_pinned_blocks(spark):
     )
     ranks = pagerank(edges, iters=8)
     ranks.write.format("noop").mode("overwrite").save()
-    # loop-invariants (nodes, e_deg, dangling) + final ranks; the raw
-    # edge checkpoint and all 7 superseded rank rounds are released
-    assert persistent_rdd_count(spark) <= 4
+    # loop-invariants (nodes, e_deg) + final ranks; the raw edge
+    # checkpoint and all 8 superseded rank rounds are released
+    assert persistent_rdd_count(spark) <= 3
     n = release_all_cached(spark)
     assert n >= 1
     assert persistent_rdd_count(spark) == 0
@@ -196,4 +196,52 @@ def test_iterative_operators_bound_pinned_blocks(spark):
         "overwrite"
     ).save()
     assert persistent_rdd_count(spark) == 1
+    release_all_cached(spark)
+
+
+def test_iterative_operators_run_no_probe_actions(spark, monkeypatch):
+    """Connected components, PageRank and logistic regression read
+    their convergence values (changed labels, node count, dangling
+    mass, row count) from their rounds' own checkpoints: no ``count``
+    or ``collect`` of their own. Logreg's one collect per iteration is
+    the gradient pull (``kernels.batch_sum``), the round itself."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    from etl_geotab_spark.blocks import release_all_cached
+    from etl_geotab_spark.operators.clusters import connected_components
+    from etl_geotab_spark.operators.logreg import train_logreg
+    from etl_geotab_spark.operators.pagerank import pagerank
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(31)], "id_a long, id_b long"
+    )
+    # node 6 has no out-edges
+    graph = spark.createDataFrame(
+        [(1, 2), (2, 1), (2, 3), (3, 1), (3, 6)], "src long, dst long"
+    )
+    points = spark.range(40).select(
+        F.array(F.col("id").cast("double"), F.lit(1.0)).alias("x"),
+        (F.col("id") % 2).alias("y"),
+    )
+    calls: list[str] = []
+    for action in ("count", "collect"):
+        orig = getattr(ClassicDataFrame, action)
+
+        def spy(self, *a, _orig=orig, _name=action, **kw):
+            calls.append(_name)
+            return _orig(self, *a, **kw)
+
+        monkeypatch.setattr(ClassicDataFrame, action, spy)
+
+    comps = connected_components(chain)
+    ranks = pagerank(graph, iters=8)
+    assert calls == []
+    train_logreg(points, "x", "y", dim=2, iterations=2)
+    assert calls == ["collect", "collect"]
+    monkeypatch.undo()
+    # the results are still right: one component, mass conserved
+    assert [r[0] for r in comps.select("component").distinct().collect()] == [0]
+    assert comps.count() == 32
+    assert abs(ranks.agg(F.sum("rank")).collect()[0][0] - 1.0) < 1e-9
     release_all_cached(spark)

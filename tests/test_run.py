@@ -15,9 +15,12 @@ from etl_geotab_spark.run import main, run
 def test_run_leaves_nothing_pinned(spark, sf_dir):
     release_all_cached(spark)
     rec = run(spark, "heavy_hitters", sf_dir)
-    assert set(rec) == {"name", "wall_s", "error", "released"}
+    assert set(rec) == {
+        "name", "wall_s", "build_s", "jobs", "error", "released"
+    }
     assert rec["name"] == "heavy_hitters"
     assert rec["error"] is None and rec["wall_s"] >= 0
+    assert 0 <= rec["build_s"] <= rec["wall_s"] and rec["jobs"] >= 0
     # forced bare, the query leaves its checkpoint pinned; the scope
     # released it
     assert rec["released"] >= 1
@@ -33,9 +36,22 @@ def test_failing_query_is_recorded_and_released(spark, sf_dir, monkeypatch):
     release_all_cached(spark)
     rec = run(spark, "pin_then_fail", sf_dir)
     assert rec["error"] == "ValueError: boom"
-    assert rec["wall_s"] == -1.0
+    assert rec["wall_s"] == -1.0 and rec["build_s"] == -1.0
     assert rec["released"] == 1
     assert persistent_rdd_count(spark) == 0
+
+
+def test_run_counts_the_jobs_of_each_build(spark, sf_dir, monkeypatch):
+    def two_pulls(spark, sf):
+        spark.range(4).collect()
+        spark.range(4).collect()
+        return spark.range(4)
+
+    monkeypatch.setitem(Q._REGISTRY, "two_pulls", (two_pulls, None))
+    # the group's earlier runs and the force are not counted
+    for _ in range(2):
+        rec = run(spark, "two_pulls", sf_dir)
+        assert rec["error"] is None and rec["jobs"] == 2
 
 
 def test_run_tags_jobs_with_the_query_name(spark, sf_dir):
